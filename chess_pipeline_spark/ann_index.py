@@ -52,6 +52,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from chess_pipeline_spark import commit
 from chess_pipeline_spark.functions.rounding import fround
 
 _DOT = (
@@ -410,18 +411,8 @@ def _write_meta(index_path: str, meta: dict) -> None:
     ingests and probes don't each pay a Spark job to re-derive them
     from the codebook parquet (r13 — one `first()` + one `count()`
     per ingest/probe call removed). Underscore-prefixed: invisible to
-    Spark's readers."""
-    import json
-
-    # r14 ADVICE: tmp + os.replace so a crash mid-write cannot leave a
-    # truncated file that fails every later probe/ingest — the crash
-    # discipline the other index sidecars follow. Local-filesystem
-    # only (like the swap/rename logic and the scandir helpers): an
-    # object-store backend must port all of them together.
-    tmp = os.path.join(index_path, "_meta.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(index_path, "_meta.json"))
+    Spark's readers; written whole (commit.write_json)."""
+    commit.write_json(os.path.join(index_path, "_meta.json"), meta)
 
 
 def _read_meta(index_path: str) -> dict:
@@ -430,16 +421,10 @@ def _read_meta(index_path: str) -> dict:
     sidecar must degrade to the derive-from-codebook fallback the
     callers already implement, not raise JSONDecodeError on every
     probe)."""
-    import json
-
-    p = os.path.join(index_path, "_meta.json")
-    if os.path.exists(p):
-        try:
-            with open(p) as fh:
-                return json.load(fh)
-        except (json.JSONDecodeError, OSError):
-            return {}
-    return {}
+    try:
+        return commit.read_json(os.path.join(index_path, "_meta.json"), {})
+    except (ValueError, OSError):
+        return {}
 
 
 def stream_ingest_ivf(vectors: DataFrame, index_path: str, id_col: str = "vec_id"):
@@ -482,51 +467,23 @@ def ingest_ivf_batch(
     exact ingest path without a running stream.
 
     Batch ids must never be reused against one index (the r9 ADVICE
-    silent-loss hazard): compaction records folded ids in
-    `_folded_batches.json` and both the probe path and the next
-    compaction anti-filter the delta against it, so rows ingested
-    under an already-folded id would be invisibly discarded. A stream
-    restarted with a deleted/fresh checkpoint restarts foreachBatch at
-    batch 0 — exactly this collision — so we raise loudly instead.
-    If you hit this on a genuine replay (compaction folded a batch the
-    stream hadn't committed yet), the folded rows are already in the
-    base and the replay is safe to drop; for a fresh checkpoint over
-    NEW data, re-ingest under ids above max(folded)."""
-    from chess_pipeline_spark.sinks import (
-        restore_bak_if_missing,
-        upsert_partition_overwrite,
-    )
-
-    from chess_pipeline_spark.sinks import require_format
+    silent-loss hazard): probes and the next compaction anti-filter
+    the delta against the folded marker, so rows ingested under a
+    folded id would be invisibly discarded, and a replay of a mid-fold
+    id would duplicate rows already moved. commit.guard_ingest raises
+    for both. A stream restarted with a deleted/fresh checkpoint
+    restarts foreachBatch at batch 0 — exactly this collision. On a
+    genuine replay (compaction folded a batch the stream hadn't
+    committed yet) the folded rows are already in the base and the
+    replay is safe to drop; for a fresh checkpoint over NEW data,
+    re-ingest under ids above max(folded)."""
+    from chess_pipeline_spark.sinks import require_format, upsert_partition_overwrite
 
     require_format(index_path, _IVF_FORMAT, "IVF/ADC index")
     spark = batch.sparkSession
-    # restore a mid-swap .bak before reading the folded marker (it
-    # lives INSIDE the lists dir): otherwise a crash-window ingest
-    # reads an empty marker and a folded-id delta would slip through
-    # only to be anti-filtered away by the next compaction
-    restore_bak_if_missing(os.path.join(index_path, "lists"))
-    folded = _read_folded(os.path.join(index_path, "lists"))
-    if batch_id in folded:
-        raise ValueError(
-            f"ingest_ivf_batch: batch_id {batch_id} was already folded into "
-            f"the base by compact_ivf_index (folded ids: {sorted(folded)}); "
-            "rows ingested under a folded id are dropped by probes and the "
-            "next compaction. Never reuse batch ids against an index — if "
-            "the stream's checkpoint was reset, resume ingest with ids "
-            f"above {max(folded)}."
-        )
-    folding = _read_folding(os.path.join(index_path, "lists"))
-    if batch_id in folding:
-        raise ValueError(
-            f"ingest_ivf_batch: batch_id {batch_id} is mid-fold — a "
-            "compaction recorded it in _folding_batches.json and may "
-            "already have moved part of its rows into the base, so a "
-            "replay here would duplicate the moved rows. Run "
-            "compact_ivf_index to finish the fold (the batch's rows are "
-            "all present across base+delta), then ingest NEW data under "
-            "a fresh id."
-        )
+    commit.guard_ingest(
+        os.path.join(index_path, "lists"), batch_id, "ingest_ivf_batch"
+    )
     seeds = spark.read.parquet(os.path.join(index_path, "centroids"))
     codebook = spark.read.parquet(os.path.join(index_path, "pq_codebook"))
     # r14 ADVICE: `is None`, not `or` — a stored 0 must not silently
@@ -556,166 +513,65 @@ def ingest_ivf_batch(
     )
 
 
-def _read_folded(lists_dir: str) -> set[int]:
-    """ingest_batch ids already folded into this base, from the
-    `_folded_batches.json` sidecar INSIDE the lists directory (Spark
-    ignores underscore-prefixed files, and the marker renames
-    atomically with the base it describes). Empty for a fresh build —
-    build_ivf_index's base contains no ingested batches."""
-    import json
-
-    p = os.path.join(lists_dir, "_folded_batches.json")
-    if os.path.exists(p):
-        with open(p) as fh:
-            return set(json.load(fh))
-    return set()
-
-
-def _write_json_atomic(path: str, payload) -> None:
-    """tmp + os.replace, the _meta.json crash discipline — a reader
-    never sees a truncated marker. Local filesystem only, like every
-    sidecar helper here."""
-    import json
-
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, path)
-
-
-def _read_folding(lists_dir: str) -> set[int]:
-    """ingest_batch ids a (possibly crashed) move-based compaction is
-    currently folding, from `_folding_batches.json` inside the lists
-    dir. A batch listed here may have SOME of its files already moved
-    into the base — ingest must refuse a replay of it (duplicates),
-    and the next compact_ivf_index run finishes the fold. Empty when
-    no fold is in flight."""
-    import json
-
-    p = os.path.join(lists_dir, "_folding_batches.json")
-    if os.path.exists(p):
-        try:
-            with open(p) as fh:
-                return set(json.load(fh))
-        except (json.JSONDecodeError, OSError):
-            return set()
-    return set()
-
-
-def _clear_folding(lists_dir: str) -> None:
-    p = os.path.join(lists_dir, "_folding_batches.json")
-    if os.path.exists(p):
-        os.remove(p)
-
-
 def compact_ivf_index(
     spark: SparkSession, index_path: str, rewrite: bool = False
 ) -> None:
     """Fold lists_delta into the base lists, idempotently.
 
     Default (r14, guide §6/§1.2 — make maintenance delta-proportional):
-    a MINOR fold that renames the delta's parquet files into the base's
-    list_id directories — zero Spark jobs, zero bytes rewritten, cost
-    proportional to the number of delta FILES rather than the base
-    size. Base and delta files carry the identical physical schema by
-    construction (_encode_rows wrote both; list_id/ingest_batch are
-    directory-encoded), so a moved file IS a base file. Exactly-once
-    across any crash instant, proven over the probe contract
-    base ∪ (delta − folded):
+    a MINOR fold that moves the delta's parquet files into the base's
+    list_id directories (commit.move_data_files) — zero Spark jobs,
+    zero bytes rewritten, cost proportional to the number of delta
+    FILES rather than the base size. Base and delta files carry the
+    identical physical schema by construction (_encode_rows wrote
+    both; list_id/ingest_batch are directory-encoded), so a moved file
+    IS a base file. Every row lives in exactly one of base/delta at
+    every instant and the fold runs in commit.folding's marker order,
+    so the probe contract base ∪ (delta − folded) reads each row
+    exactly once across any crash, and a re-run finishes the fold.
 
-      * os.rename is atomic and removes the source, so every row lives
-        in exactly one of base/delta at all times — a probe racing the
-        fold reads each row exactly once, before and after any crash;
-      * `_folding_batches.json` (written BEFORE the first move) lists
-        the batches being folded: ingest refuses a replay of those ids
-        (their rows may be partially in the base, where a dynamic
-        partition overwrite of the delta cannot reach them), closing
-        the duplicate window a replay-during-crashed-fold would open;
-      * `_folded_batches.json` is updated only AFTER every file of the
-        fold moved, so probes never anti-filter a batch whose rows are
-        still (partly) in the delta;
-      * a re-run after ANY crash recomputes the remaining work from
-        the surviving delta directories and finishes it.
-
-    `rewrite=True` is the MAJOR compaction: the pre-r14 read-union-
-    rewrite through a tmp + .bak swap, which also consolidates the
-    base into freshly AQE-sized files. A deployment alternates: minor
-    per delta epoch, major on a file-count budget. Results (rows, and
-    every probe) are identical either way — only file layout differs.
+    `rewrite=True` is the MAJOR compaction: read base ∪ (delta −
+    folded) and swap it in whole (commit.replace_dir, with the folded
+    marker inside the new base), which also consolidates the base into
+    freshly AQE-sized files. A deployment alternates: minor per delta
+    epoch, major on a file-count budget. Results (rows, and every
+    probe) are identical either way — only file layout differs.
     """
     import shutil
 
-    from chess_pipeline_spark.sinks import clean_stale_tmp_dirs
-
     delta_path = os.path.join(index_path, "lists_delta")
     lists_path = os.path.join(index_path, "lists")
-    bak_path = f"{lists_path}.__bak__"
-    if not os.path.exists(lists_path) and os.path.exists(bak_path):
-        # crashed between the two renames: the .bak IS the base
-        os.rename(bak_path, lists_path)
-    clean_stale_tmp_dirs(lists_path)
-    if not os.path.exists(delta_path):
-        # a fold may have crashed after removing the delta but before
-        # clearing its in-flight marker — finish that cleanup
-        if os.path.exists(lists_path):
-            _clear_folding(lists_path)
-        if rewrite and os.path.exists(lists_path):
-            # a major compaction with nothing to fold is still a
-            # base rewrite — that file-count consolidation is its
-            # whole purpose after a run of minor folds
-            _compact_rewrite(
-                spark, lists_path, delta_path, _read_folded(lists_path), []
-            )
+    commit.recover(lists_path)
+    if not os.path.exists(lists_path):
         return
-    folded = _read_folded(lists_path)
-    # r13: the delta's batch ids are its partition DIRECTORY names
-    # (ingest lands under list_id=*/ingest_batch=* by construction) —
-    # an os.scandir answers what the previous distinct().collect()
-    # paid a Spark job for, and it's the same source of truth Spark's
-    # own partition discovery reads.
-    new_batches = sorted(_delta_batch_ids_fs(delta_path) - folded)
-    if not new_batches:
-        # everything in the delta is already in the base (crash after
-        # the marker update, before the delta removal) — finish cleanup
-        shutil.rmtree(delta_path)
-        _clear_folding(lists_path)
-        return
-    if rewrite:
-        _compact_rewrite(spark, lists_path, delta_path, folded, new_batches)
-        return
-    # ---- minor fold: move delta files into the base, no Spark ----
-    _write_json_atomic(
-        os.path.join(lists_path, "_folding_batches.json"), new_batches
+    folded = commit.read_folded(lists_path)
+    # r13: the delta's batch ids are its partition DIRECTORY names —
+    # an os.scandir answers what a distinct().collect() paid a Spark
+    # job for, from the same source Spark's partition discovery reads
+    pending = (
+        _delta_batch_ids_fs(delta_path) - folded
+        if os.path.exists(delta_path)
+        else set()
     )
-    todo = set(new_batches)
-    for lid in os.scandir(delta_path):
-        if not (lid.is_dir() and lid.name.startswith("list_id=")):
-            continue
-        for b in os.scandir(lid.path):
-            if not (b.is_dir() and b.name.startswith("ingest_batch=")):
-                continue
-            bid = int(b.name.split("=", 1)[1])
-            if bid not in todo:
-                continue
-            dest = os.path.join(lists_path, lid.name)
-            os.makedirs(dest, exist_ok=True)
-            for f in os.scandir(b.path):
-                if f.is_file() and not f.name.startswith(("_", ".")):
-                    # carry the Hadoop checksum sidecar so local-fs
-                    # verification stays intact for the moved file
-                    crc = os.path.join(b.path, f".{f.name}.crc")
-                    if os.path.exists(crc):
-                        os.rename(
-                            crc,
-                            os.path.join(dest, f".b{bid}-{f.name}.crc"),
+    with commit.folding(lists_path, pending) as todo:
+        # delta files of an already-folded batch are stale copies of
+        # base rows (probes filter them out): only the rest moves in
+        fresh = todo - folded
+        if rewrite:
+            _compact_rewrite(spark, lists_path, delta_path, folded | todo, fresh)
+        elif fresh and os.path.exists(delta_path):
+            for lid in list(os.scandir(delta_path)):
+                if not (lid.is_dir() and lid.name.startswith("list_id=")):
+                    continue
+                for b in list(os.scandir(lid.path)):
+                    if not (b.is_dir() and b.name.startswith("ingest_batch=")):
+                        continue
+                    bid = int(b.name.split("=", 1)[1])
+                    if bid in fresh:
+                        commit.move_data_files(
+                            b.path, os.path.join(lists_path, lid.name), f"b{bid}-"
                         )
-                    os.rename(f.path, os.path.join(dest, f"b{bid}-{f.name}"))
-    _write_json_atomic(
-        os.path.join(lists_path, "_folded_batches.json"),
-        sorted(folded | set(new_batches)),
-    )
-    _clear_folding(lists_path)
-    shutil.rmtree(delta_path)
+    shutil.rmtree(delta_path, ignore_errors=True)
 
 
 def _compact_rewrite(
@@ -723,41 +579,28 @@ def _compact_rewrite(
     lists_path: str,
     delta_path: str,
     folded: set[int],
-    new_batches: list[int],
+    new_batches: set[int],
 ) -> None:
-    """Major compaction: read base ∪ (delta − folded), rewrite the
-    base in one AQE-rebalanced partitioned write, and swap it in via
-    tmp → .bak → rename (a crash at any instant leaves either the
-    target or the .bak holding a full base — _read_lists falls back
-    to the .bak). The `_folded_batches.json` marker rides INSIDE the
-    merged tmp, so it renames atomically with the base it describes."""
-    import json
-    import shutil
-    import uuid
-
-    base = spark.read.parquet(lists_path)
-    merged = base
-    if os.path.exists(delta_path) and _delta_has_files(delta_path):
+    """Major compaction: read base ∪ (delta batches new_batches) and
+    swap it in as the base in one AQE-rebalanced partitioned write,
+    with the `folded` marker inside — it lands atomically with the
+    rows it covers, so probes never read a folded delta row twice."""
+    merged = spark.read.parquet(lists_path)
+    if new_batches and os.path.exists(delta_path) and _delta_has_files(delta_path):
         delta = (
             spark.read.parquet(delta_path)
-            .filter(F.col("ingest_batch").isin(new_batches))
+            .filter(F.col("ingest_batch").isin(sorted(new_batches)))
             .drop("ingest_batch")
         )
-        merged = base.unionByName(delta)
-    tmp = f"{lists_path}.__tmp__{uuid.uuid4().hex[:8]}"
-    merged.hint("rebalance", "list_id").write.partitionBy("list_id").mode(
-        "overwrite"
-    ).parquet(tmp)
-    with open(os.path.join(tmp, "_folded_batches.json"), "w") as fh:
-        json.dump(sorted(folded | set(new_batches)), fh)
-    bak_path = f"{lists_path}.__bak__"
-    if os.path.exists(bak_path):
-        shutil.rmtree(bak_path)
-    os.rename(lists_path, bak_path)
-    os.rename(tmp, lists_path)
-    shutil.rmtree(bak_path)
-    if os.path.exists(delta_path):
-        shutil.rmtree(delta_path)
+        merged = merged.unionByName(delta)
+    commit.replace_dir(
+        lists_path,
+        lambda tmp: merged.hint("rebalance", "list_id")
+        .write.partitionBy("list_id")
+        .mode("overwrite")
+        .parquet(tmp),
+        sidecars={commit.FOLDED: sorted(folded)},
+    )
 
 
 def _delta_batch_ids_fs(delta_path: str) -> set[int]:
@@ -768,10 +611,9 @@ def _delta_batch_ids_fs(delta_path: str) -> set[int]:
     so the listing equals the distinct column values.
 
     LOCAL FILESYSTEM ONLY (r14 ADVICE): os.scandir binds index paths
-    to a POSIX fs, like the swap/rename logic and the _meta.json
-    sidecar I/O — the distinct().collect() this replaced worked
-    through any Hadoop FS. An object-store backend must port every
-    one of these helpers together, not just the renames."""
+    to a POSIX fs, like the commit module — the distinct().collect()
+    this replaced worked through any Hadoop FS. An object-store
+    backend ports this helper along with chess_pipeline_spark.commit."""
     ids: set[int] = set()
     for lid in os.scandir(delta_path):
         if not (lid.is_dir() and lid.name.startswith("list_id=")):
@@ -797,23 +639,19 @@ def _read_lists(spark: SparkSession, index_path: str) -> DataFrame:
     """Base lists plus any un-compacted ingest delta (same schema by
     construction — _encode_rows built both). Partition pruning on
     list_id applies to each scan; the delta is delta-sized by
-    definition, so an unpruned delta scan is bounded anyway. If a
-    compaction crashed mid-swap the base lives in the .bak sibling —
-    fall back to it rather than failing the probe. Delta batches the
-    base's _folded_batches.json marker already covers are excluded, so
-    a probe racing (or crashed out of) a compaction never reads a
-    folded row twice."""
+    definition, so an unpruned delta scan is bounded anyway. The base
+    is read wherever it is (commit.readable), and delta batches its
+    folded marker already covers are excluded, so a probe racing (or
+    crashed out of) a compaction never reads a folded row twice."""
     from chess_pipeline_spark.sinks import require_format
 
     require_format(index_path, _IVF_FORMAT, "IVF/ADC index")
-    lists_path = os.path.join(index_path, "lists")
-    if not os.path.exists(lists_path) and os.path.exists(f"{lists_path}.__bak__"):
-        lists_path = f"{lists_path}.__bak__"
+    lists_path = commit.readable(os.path.join(index_path, "lists"))
     lists = spark.read.parquet(lists_path)
     delta_path = os.path.join(index_path, "lists_delta")
     if os.path.exists(delta_path) and _delta_has_files(delta_path):
         delta = spark.read.parquet(delta_path)
-        folded = _read_folded(lists_path)
+        folded = commit.read_folded(lists_path)
         if folded and "ingest_batch" in delta.columns:
             delta = delta.filter(~F.col("ingest_batch").isin(sorted(folded)))
         lists = lists.unionByName(

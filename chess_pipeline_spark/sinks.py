@@ -11,7 +11,7 @@ columns). Spark-native equivalents, in preference order:
    shuffle beyond the write, idempotent per partition.
 2. ``upsert_parquet`` — key-level merge for unpartitioned targets:
    read target, anti-join away rows whose keys are in the batch,
-   union the batch, rewrite atomically (write temp + swap). The
+   union the batch, rewrite atomically (commit.replace_dir). The
    MERGE-emulation pattern for lakehouse-less deployments.
 3. ``upsert_jdbc_staging`` — the staging-table + MERGE/DELETE+INSERT
    plan for real JDBC targets; generates the SQL and stages via
@@ -25,10 +25,11 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from chess_pipeline_spark import commit
 
 
 def upsert_partition_overwrite(
@@ -49,41 +50,6 @@ def upsert_partition_overwrite(
     )
 
 
-def read_folded_marker(table_dir: str) -> set[int]:
-    """batch_ids already folded into batch 0 of a batch-partitioned
-    ledger, from the `_folded_batches.json` sidecar INSIDE the table
-    directory (Spark ignores underscore-prefixed files; the marker
-    renames atomically with the table it describes). Empty until the
-    first compaction. Shared discipline with ann_index/_read_folded
-    and text_index._read_folded."""
-    import json
-
-    p = os.path.join(table_dir, "_folded_batches.json")
-    if os.path.exists(p):
-        with open(p) as fh:
-            return set(json.load(fh))
-    return set()
-
-
-def read_folded_digests(table_dir: str) -> dict[int, str]:
-    """Per-batch content digests recorded by compact_batch_ledger in
-    `_folded_digests.json` (sibling of `_folded_batches.json`): lets
-    the folded-id ingest guard tell a LEGITIMATE at-least-once replay
-    (batch committed to the ledger, folded by compaction, then
-    replayed because the stream checkpoint hadn't committed) — whose
-    rows are identical to what was folded, so skipping is safe — from
-    a genuine id reuse, which must still raise. Empty for ledgers
-    compacted before this marker existed (the guard then raises, the
-    pre-digest behavior)."""
-    import json
-
-    p = os.path.join(table_dir, "_folded_digests.json")
-    if os.path.exists(p):
-        with open(p) as fh:
-            return {int(k): v for k, v in json.load(fh).items()}
-    return {}
-
-
 def ledger_content_digest(df: DataFrame, cols: list[str]) -> str:
     """Order-independent content fingerprint of a ledger frame:
     ``n_rows:sum(xxhash64(cols-as-strings) as decimal(38,0))``. Row
@@ -100,19 +66,6 @@ def ledger_content_digest(df: DataFrame, cols: list[str]) -> str:
         F.count("*").alias("n"),
     ).first()
     return f"{row['n']}:{row['d']}"
-
-
-def clean_stale_tmp_dirs(path: str) -> None:
-    """Drop leftover ``<path>.__tmp__<uuid>`` directories from crashed
-    compactions. Safe by construction: a tmp is only renamed into
-    place AFTER the live dir moved to .bak, so any tmp still on disk
-    when a new compaction starts is garbage from a prior crash —
-    without this sweep, repeated crash-retry cycles accumulate
-    full-size orphan copies of the table inside the data root."""
-    import glob
-
-    for stale in glob.glob(f"{path}.__tmp__*"):
-        shutil.rmtree(stale, ignore_errors=True)
 
 
 def compact_batch_ledger(
@@ -136,25 +89,16 @@ def compact_batch_ledger(
     may use this; per-batch SNAPSHOT series (where the batch history
     is the point) must not.
 
-    Crash discipline = compact_ivf_index/compact_text_index: merged
-    tmp (carrying the `_folded_batches.json` marker) → rename live to
-    .bak → rename tmp in → drop .bak; a crash at any instant leaves a
-    full table under the target or the .bak, restored on the next
-    run. Ingest paths must refuse batch ids already in the marker —
-    a replayed batch under a folded id would DOUBLE-COUNT (ledger
-    addition is not idempotent), the exact hazard the marker exists
-    to make loud.
+    The merged table replaces the ledger in one commit.replace_dir
+    swap that carries the `_folded_batches.json` marker, so ingest
+    paths refuse folded ids (commit.guard_ingest) from the instant the
+    fold lands — a replayed batch under a folded id would DOUBLE-COUNT
+    (ledger addition is not idempotent).
     """
-    import json
-    import uuid
-
-    bak = f"{ledger_dir}.__bak__"
-    if not os.path.exists(ledger_dir) and os.path.exists(bak):
-        os.rename(bak, ledger_dir)  # crashed between the two renames
-    clean_stale_tmp_dirs(ledger_dir)
+    commit.recover(ledger_dir)
     if not os.path.exists(ledger_dir):
         return
-    folded = read_folded_marker(ledger_dir)
+    folded = commit.read_folded(ledger_dir)
     cur = spark.read.parquet(ledger_dir)
     ids = {
         int(r["batch_id"])
@@ -183,7 +127,12 @@ def compact_batch_ledger(
         )
         .collect()
     )
-    digests = read_folded_digests(ledger_dir)
+    digests = {
+        int(k): v
+        for k, v in commit.read_json(
+            os.path.join(ledger_dir, commit.DIGESTS), {}
+        ).items()
+    }
     digests.update(
         {int(r["batch_id"]): f"{r['n']}:{r['d']}" for r in digest_rows}
     )
@@ -193,31 +142,16 @@ def compact_batch_ledger(
     merged = (
         cur.groupBy(*group_cols).agg(*aggs).withColumn("batch_id", F.lit(0))
     )
-    tmp = f"{ledger_dir}.__tmp__{uuid.uuid4().hex[:8]}"
-    merged.write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_folded_batches.json"), "w") as fh:
-        json.dump(sorted(folded | ids), fh)
-    with open(os.path.join(tmp, "_folded_digests.json"), "w") as fh:
-        json.dump({str(k): v for k, v in sorted(digests.items())}, fh)
-    # carry every OTHER underscore sidecar across the swap untouched —
-    # ledgers stamp identity metadata beside their data (the DSIR
-    # _target.json, the simhash _format.json pattern) and a fold that
-    # silently dropped a stamp would turn the next ingest's
-    # refuse-on-mismatch guard into refuse-always (r12)
-    for name in os.listdir(ledger_dir):
-        if (
-            name.startswith("_")
-            and name.endswith(".json")
-            and not os.path.exists(os.path.join(tmp, name))
-        ):
-            shutil.copy(
-                os.path.join(ledger_dir, name), os.path.join(tmp, name)
-            )
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
-    os.rename(ledger_dir, bak)
-    os.rename(tmp, ledger_dir)
-    shutil.rmtree(bak)
+    commit.replace_dir(
+        ledger_dir,
+        lambda tmp: merged.write.partitionBy("batch_id")
+        .mode("overwrite")
+        .parquet(tmp),
+        sidecars={
+            commit.FOLDED: sorted(folded | ids),
+            commit.DIGESTS: {str(k): v for k, v in sorted(digests.items())},
+        },
+    )
 
 
 def upsert_parquet(df: DataFrame, path: str, keys: list[str]) -> None:
@@ -231,9 +165,9 @@ def upsert_parquet(df: DataFrame, path: str, keys: list[str]) -> None:
     batch carrying two rows for one key keeps both (deduping here
     would nondeterministically discard one).
 
-    Local-filesystem targets only (the atomic tmp-swap uses
-    os.rename); cluster deployments use upsert_partition_overwrite
-    or a lakehouse MERGE instead."""
+    Local-filesystem targets only (commit.replace_dir renames);
+    cluster deployments use upsert_partition_overwrite or a lakehouse
+    MERGE instead."""
     if "://" in path and not path.startswith("file://"):
         raise ValueError(
             f"upsert_parquet only supports local paths, got {path!r}; "
@@ -241,17 +175,14 @@ def upsert_parquet(df: DataFrame, path: str, keys: list[str]) -> None:
         )
     spark = df.sparkSession
     batch = df
+    commit.recover(path)
     if os.path.exists(path):
         existing = spark.read.parquet(path)
         keep = existing.join(batch.select(*keys).distinct(), keys, "left_anti")
         merged = keep.unionByName(batch, allowMissingColumns=True)
     else:
         merged = batch
-    tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
+    commit.replace_dir(path, lambda tmp: merged.write.mode("overwrite").parquet(tmp))
 
 
 def upsert_jdbc_staging(
@@ -398,76 +329,28 @@ def scd2_apply(
 
 
 def read_bounded_ledger(spark, registers_path: str, empty_schema: str):
-    """Read a bak-swap bounded register ledger, falling back to the
-    .bak sibling when a mid-swap crash left the live dir renamed away
-    (at every instant one of the two holds the accumulated state)."""
+    """Writer-side read of a register ledger: recover a crashed swap
+    (commit.recover), then the live table — or an empty frame for a
+    ledger not yet written."""
     from pyspark.errors import AnalysisException
 
-    bak = f"{registers_path}.__bak__"
+    commit.recover(registers_path)
     try:
         return spark.read.parquet(registers_path)
     except AnalysisException:
-        try:
-            return spark.read.parquet(bak)
-        except AnalysisException:
-            return spark.createDataFrame([], empty_schema)
+        return spark.createDataFrame([], empty_schema)
 
 
 def bak_swap_write(spark, merged: DataFrame, registers_path: str) -> DataFrame:
-    """Atomically replace a BOUNDED register ledger: collect the
-    merged rows (KB-scale by construction — the sketch's point),
-    write to a tmp dir, rename live → .bak, rename tmp into place,
-    drop the .bak. There is no instant where neither dir holds the
-    accumulated registers (the r6-advice gap: rmtree-then-rename had
-    such a window). Returns the materialized snapshot frame."""
-    bak = f"{registers_path}.__bak__"
-    rows = merged.collect()
-    snap = spark.createDataFrame(rows, merged.schema)
-    tmp = f"{registers_path}.__tmp__{uuid.uuid4().hex[:8]}"
-    snap.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
-    if os.path.exists(registers_path):
-        os.rename(registers_path, bak)
-    os.rename(tmp, registers_path)
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
+    """Replace a BOUNDED register ledger: collect the merged rows
+    (KB-scale by construction — the sketch's point), so the write never
+    reads the table it replaces, and commit them with
+    commit.replace_dir. Returns the materialized snapshot frame."""
+    snap = spark.createDataFrame(merged.collect(), merged.schema)
+    commit.replace_dir(
+        registers_path, lambda tmp: snap.write.mode("overwrite").parquet(tmp)
+    )
     return snap
-
-
-def bak_swap_write_distributed(spark, merged: DataFrame, path: str) -> None:
-    """bak_swap_write for UNBOUNDED state (one row per distinct key
-    ever seen — the split ledger, digest sets): the same no-window
-    crash discipline, but the merged frame writes straight to the tmp
-    dir as a DISTRIBUTED parquet job instead of collecting to the
-    driver. The write executes while the live dir still exists (the
-    merged plan reads it), and only then do the renames run: at every
-    instant the target or the .bak holds the full state. Entry sweeps
-    stale tmps from prior crashes (clean_stale_tmp_dirs rationale)."""
-    clean_stale_tmp_dirs(path)
-    bak = f"{path}.__bak__"
-    tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
-    if os.path.exists(path):
-        os.rename(path, bak)
-    os.rename(tmp, path)
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
-
-
-def restore_bak_if_missing(path: str) -> None:
-    """If a compaction crashed between its two renames, the full
-    table lives in the .bak sibling — move it back before reading or
-    APPENDING. Appenders must call this at entry: appending to a
-    fresh live dir while the real state sits in .bak forks the state,
-    and the next compaction would fold the fork and drop the .bak
-    (silent loss). Reads alone can fall back (read_bounded_ledger);
-    appends cannot."""
-    bak = f"{path}.__bak__"
-    if not os.path.exists(path) and os.path.exists(bak):
-        os.rename(bak, path)
 
 
 def compact_append_ledger(spark, ledger_dir: str, fold) -> None:
@@ -486,16 +369,15 @@ def compact_append_ledger(spark, ledger_dir: str, fold) -> None:
     ``fold`` maps the full ledger frame to its compact equivalent and
     must be probe-invariant (readers see identical results before and
     after) and idempotent (fold∘fold == fold, so a replayed
-    compaction is a content no-op). Crash discipline = the bak-swap:
-    write folded tmp (distributed) → rename live to .bak → rename tmp
-    in → drop .bak; entry restores a .bak-only state and sweeps stale
-    tmps."""
-    restore_bak_if_missing(ledger_dir)
-    clean_stale_tmp_dirs(ledger_dir)
+    compaction is a content no-op). The folded frame writes as a
+    distributed job while the live ledger it reads stays in place,
+    then commit.replace_dir swaps it in."""
+    commit.recover(ledger_dir)
     if not os.path.exists(ledger_dir):
         return
-    bak_swap_write_distributed(
-        spark, fold(spark.read.parquet(ledger_dir)), ledger_dir
+    folded = fold(spark.read.parquet(ledger_dir))
+    commit.replace_dir(
+        ledger_dir, lambda tmp: folded.write.mode("overwrite").parquet(tmp)
     )
 
 
@@ -671,66 +553,41 @@ def check_or_stamp_format(dir_path: str, format_str: str, what: str) -> None:
     wrong results with no error; instead: a fresh directory is
     stamped, a stamped mismatch refuses with a rebuild message, and a
     pre-existing unstamped directory refuses as unverifiable.
-    Underscore-prefixed, so parquet readers never see it; ledger
-    compactions carry it across their directory swaps."""
-    import json
-
-    stamp = os.path.join(dir_path, "_format.json")
-    exists = os.path.isdir(dir_path) and any(
-        not n.startswith("_") for n in os.listdir(dir_path)
-    )
-    if os.path.exists(stamp):
-        with open(stamp) as fh:
-            stored = json.load(fh).get("format")
-        if stored != format_str:
-            raise ValueError(
-                f"{what} at {dir_path} was written with format "
-                f"{stored!r} but this build produces {format_str!r} — "
-                "rebuild the index"
-            )
-    elif exists:
-        raise ValueError(
-            f"{what} at {dir_path} predates format stamping and cannot "
-            f"be verified against {format_str!r} — rebuild the index"
-        )
-    else:
-        os.makedirs(dir_path, exist_ok=True)
-        with open(stamp, "w") as fh:
-            json.dump({"format": format_str}, fh)
+    Underscore-prefixed, so parquet readers never see it; directory
+    swaps carry it (commit.replace_dir)."""
+    if not require_format(dir_path, format_str, what):
+        stamp_format(dir_path, format_str)
 
 
 def stamp_format(dir_path: str, format_str: str) -> None:
     """Unconditional (re)stamp — the BUILD path, whose intent is a
     rebuild: overwriting an old-format index with a fresh one is the
     documented remedy, so the stamp follows the bytes."""
-    import json
-
     os.makedirs(dir_path, exist_ok=True)
-    with open(os.path.join(dir_path, "_format.json"), "w") as fh:
-        json.dump({"format": format_str}, fh)
+    commit.write_json(os.path.join(dir_path, "_format.json"), {"format": format_str})
 
 
-def require_format(dir_path: str, format_str: str, what: str) -> None:
+def require_format(dir_path: str, format_str: str, what: str) -> bool:
     """PROBE-path check: a stamped mismatch or an unstamped directory
     WITH data refuses; a missing/empty directory defers to the
     reader's own error (probing a nonexistent index should fail as
-    exactly that, not as a stamping complaint)."""
-    import json
-
-    stamp = os.path.join(dir_path, "_format.json")
-    if os.path.exists(stamp):
-        with open(stamp) as fh:
-            stored = json.load(fh).get("format")
+    exactly that, not as a stamping complaint). Returns whether the
+    directory carries a (matching) stamp."""
+    stamp = commit.read_json(os.path.join(dir_path, "_format.json"))
+    if stamp is not None:
+        stored = stamp.get("format")
         if stored != format_str:
             raise ValueError(
                 f"{what} at {dir_path} was written with format "
                 f"{stored!r} but this build expects {format_str!r} — "
                 "rebuild the index"
             )
-    elif os.path.isdir(dir_path) and any(
+        return True
+    if os.path.isdir(dir_path) and any(
         not n.startswith("_") for n in os.listdir(dir_path)
     ):
         raise ValueError(
             f"{what} at {dir_path} predates format stamping and cannot "
             f"be verified against {format_str!r} — rebuild the index"
         )
+    return False

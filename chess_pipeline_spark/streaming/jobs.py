@@ -19,6 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from chess_pipeline_spark import commit
 from chess_pipeline_spark.sources.tables import _normalize_events, ensure_session_confs
 
 
@@ -265,10 +266,8 @@ def stream_scd2(
     Exactly-once by ALGEBRA, not layout: re-applying the same
     snapshot batch is a no-op (no attribute differs the second time,
     so no row closes and no row appends), so at-least-once
-    foreachBatch delivery cannot duplicate versions. Crash safety is
-    the .bak swap stream_hll_distinct uses — at any instant the
-    target or its .bak sibling holds the full dimension, and the
-    reader falls back.
+    foreachBatch delivery cannot duplicate versions. Each batch
+    commits the new dimension with commit.replace_dir.
 
     100 TB shape: scd2_apply touches only OPEN rows + the batch
     (closed history unions through untouched — partition the
@@ -292,35 +291,19 @@ def scd2_process_batch(
 ) -> None:
     """One stream_scd2 micro-batch — module-level so batch-mode
     callers and the replay-idempotency test drive the exact path."""
-    import os
-    import shutil
-    import uuid
-
     from pyspark.errors import AnalysisException
 
     from chess_pipeline_spark.sinks import scd2_apply
 
     spark = batch.sparkSession
-    bak = f"{dim_path}.__bak__"
+    commit.recover(dim_path)
     try:
         current = spark.read.parquet(dim_path)
     except AnalysisException:
-        try:
-            current = spark.read.parquet(bak)
-        except AnalysisException:
-            fields = ", ".join(
-                f"{c} {t}"
-                for c, t in zip(
-                    [*keys, *attrs],
-                    [
-                        dict(batch.dtypes)[c]
-                        for c in [*keys, *attrs]
-                    ],
-                )
-            )
-            current = spark.createDataFrame(
-                [], f"{fields}, valid_from long, valid_to long, is_current boolean"
-            )
+        fields = ", ".join(f"{c} {dict(batch.dtypes)[c]}" for c in [*keys, *attrs])
+        current = spark.createDataFrame(
+            [], f"{fields}, valid_from long, valid_to long, is_current boolean"
+        )
     from chess_pipeline_spark.checkpoints import scoped_checkpoints
 
     merged = scd2_apply(current, batch, keys, attrs, batch_ts=batch_id)
@@ -332,15 +315,9 @@ def scd2_process_batch(
     # scope only ever sees this batch's pin.
     with scoped_checkpoints(spark):
         rows = merged.localCheckpoint()  # pin before the swap rewrites source
-        tmp = f"{dim_path}.__tmp__{uuid.uuid4().hex[:8]}"
-        rows.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(bak):
-            shutil.rmtree(bak)
-        if os.path.exists(dim_path):
-            os.rename(dim_path, bak)
-        os.rename(tmp, dim_path)
-        if os.path.exists(bak):
-            shutil.rmtree(bak)
+        commit.replace_dir(
+            dim_path, lambda tmp: rows.write.mode("overwrite").parquet(tmp)
+        )
 
 
 def stream_ingest_dedup(docs: DataFrame, index_path: str, verdicts_path: str):
@@ -386,13 +363,12 @@ def stream_ingest_dedup(docs: DataFrame, index_path: str, verdicts_path: str):
         # are invisible to parquet readers, the _folded_batches.json
         # pattern) and a mismatch, or a pre-existing index with no
         # stamp at all, refuses loudly instead.
-        import json
         import os
 
         stamp_path = os.path.join(index_path, "_format.json")
-        if os.path.exists(stamp_path):
-            with open(stamp_path) as fh:
-                stored = json.load(fh).get("signature_format")
+        stamp = commit.read_json(stamp_path)
+        if stamp is not None:
+            stored = stamp.get("signature_format")
             if stored != SIMHASH_FORMAT:
                 raise ValueError(
                     f"simhash index at {index_path} was written with "
@@ -409,8 +385,7 @@ def stream_ingest_dedup(docs: DataFrame, index_path: str, verdicts_path: str):
             )
         else:
             os.makedirs(index_path, exist_ok=True)
-            with open(stamp_path, "w") as fh:
-                json.dump({"signature_format": SIMHASH_FORMAT}, fh)
+            commit.write_json(stamp_path, {"signature_format": SIMHASH_FORMAT})
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -503,21 +478,14 @@ def _paragraph_process_batch(
         paragraph_rollup,
     )
 
-    from chess_pipeline_spark.sinks import (
-        restore_bak_if_missing,
-        upsert_partition_overwrite,
-    )
+    from chess_pipeline_spark.sinks import upsert_partition_overwrite
 
     spark = batch.sparkSession
     d = batch.select("doc_id", "text")
     chunks = paragraph_chunks(d).withColumn("digest", F.md5("chunk"))
-    # crash-recovery at APPEND entry (r10): if a compaction died
-    # mid-swap the digest set lives in the .bak sibling — restore it
-    # BEFORE reading/appending. Appending new digests to a fresh live
-    # dir would fork the state and the next compaction would fold the
-    # fork and drop the .bak (silent loss); a read-side fallback
-    # alone cannot prevent that.
-    restore_bak_if_missing(ledger_path)
+    # the read recovers a crashed compaction's swap BEFORE the append
+    # below (r10): appending to a fresh live dir while the digest set
+    # sits in .bak would fork the state
     ledger = _read_bounded_ledger(
         spark, ledger_path, "digest string"
     ).select("digest", F.lit(True).alias("in_ledger"))
@@ -616,7 +584,7 @@ def _boiler_process_batch(
         .agg(F.count_distinct("doc_id").cast("long").alias("inc"))
         .withColumn("batch_id", F.lit(batch_id))
     )
-    # guard FIRST (it also restores a mid-swap .bak, so the prior
+    # guard FIRST (it also recovers a crashed swap, so the prior
     # read below never sees a half-swapped empty ledger); skip==True
     # is the identical-content post-compaction replay — verdicts
     # still rewrite their partition, the ledger write is elided
@@ -711,15 +679,11 @@ def stream_hll_distinct(events: DataFrame, registers_path: str, estimates_path: 
     driver-side-tiny by construction; an append-only band/bucket
     layout is unnecessary at any scale because the state is bounded.
 
-    Crash safety: the snapshot lands in a temp dir, the live ledger is
-    renamed to a .bak sibling, the temp dir is renamed into place, and
-    only then is the .bak removed — at every instant either the target
-    or the .bak holds the full accumulated registers (HLL registers are
-    NOT reconstructible from checkpoint replay of one batch, so a
-    window with neither would lose state permanently). The reader
-    falls back to the .bak when the target is missing, so checkpoint
-    replay of a batch that crashed mid-swap max-merges into REAL
-    state, never an empty one.
+    Each batch commits the merged registers with commit.replace_dir
+    (HLL registers are NOT reconstructible from checkpoint replay of
+    one batch, so the commit protocol's no-window invariant is what
+    keeps the accumulated state): a batch replayed after a crash
+    mid-swap max-merges into REAL state, never an empty one.
     """
 
     def _process(batch: DataFrame, batch_id: int) -> None:
@@ -728,12 +692,10 @@ def stream_hll_distinct(events: DataFrame, registers_path: str, estimates_path: 
     return events.writeStream.foreachBatch(_process)
 
 
-# bak-swap bounded-ledger helpers live in sinks.py (shared with the
-# persisted text index's stats ledger); aliased here for the jobs
+# bounded-ledger helpers live in sinks.py; aliased here for the jobs
 # that predate the move
 from chess_pipeline_spark.functions.rounding import grid_cents
 from chess_pipeline_spark.sinks import bak_swap_write as _bak_swap_write
-from chess_pipeline_spark.sinks import bak_swap_write_distributed
 from chess_pipeline_spark.sinks import read_bounded_ledger as _read_bounded_ledger
 
 
@@ -966,63 +928,22 @@ def compact_pca_gram_ledger(spark, ledger_path: str) -> None:
 def _refuse_folded_batch_id(
     ledger_path: str, batch_id: int, job: str, frame: DataFrame | None = None
 ) -> bool:
-    """Shared folded-id ingest guard for the additive batch-partition
-    ledgers: their compaction records folded ids in
-    `_folded_batches.json`, and because ledger ADDITION is not
-    idempotent, a replayed/reused id after the fold would double-count.
+    """commit.guard_ingest for the additive batch-partition ledgers,
+    whose compaction records a content digest per folded batch: True
+    (skip the write) for the legitimate at-least-once replay of a
+    folded batch with IDENTICAL rows — ``frame``, batch_id column
+    ignored. Any other folded id raises, since ledger addition is not
+    idempotent and a reused id would double-count. Ledgers whose
+    recomputed rows aren't bit-deterministic (float sums) may fail the
+    digest compare on a legitimate replay; that degrades to the raise,
+    never to a silent double-count."""
+    from chess_pipeline_spark.sinks import ledger_content_digest
 
-    Returns True for the ONE legitimate replay shape — the batch was
-    committed to the ledger but not yet to the stream checkpoint when
-    compaction folded it, so the at-least-once restart replays it with
-    IDENTICAL rows: when ``frame`` (the rows this ingest would write,
-    batch_id column ignored) matches the content digest compaction
-    recorded in `_folded_digests.json`, the caller must skip the write
-    (a no-op replay) instead of wedging the stream in a permanent
-    restart-raise loop until an operator intervenes. Any other folded
-    id — digest mismatch, no recorded digest, or no frame to compare —
-    raises loudly (the silent-loss/corruption hazard class the r9
-    ADVICE flagged on the IVF index). Ledgers whose recomputed rows
-    aren't bit-deterministic (float sums) may fail the digest compare
-    on a legitimate replay; that degrades to the raise, never to a
-    silent double-count."""
-    import warnings
-
-    from chess_pipeline_spark.sinks import (
-        ledger_content_digest,
-        read_folded_digests,
-        read_folded_marker,
-        restore_bak_if_missing,
-    )
-
-    # a compaction crash mid-swap leaves the ledger (and the folded
-    # marker INSIDE it) in the .bak sibling; restore before reading
-    # the marker or writing — otherwise the guard reads an empty
-    # marker, the ingest writes into a fresh live dir, and the next
-    # compaction folds the fork and drops the .bak (silent loss)
-    restore_bak_if_missing(ledger_path)
-    folded = read_folded_marker(ledger_path)
-    if batch_id not in folded:
-        return False
+    digest = None
     if frame is not None:
-        want = read_folded_digests(ledger_path).get(batch_id)
-        if want is not None:
-            cols = [c for c in frame.columns if c != "batch_id"]
-            if ledger_content_digest(frame, cols) == want:
-                warnings.warn(
-                    f"{job}: batch_id {batch_id} replayed after compaction "
-                    "folded it, with identical content — skipping (the "
-                    "legitimate at-least-once replay shape).",
-                    stacklevel=2,
-                )
-                return True
-    raise ValueError(
-        f"{job}: batch_id {batch_id} was already folded into batch 0 "
-        f"(folded ids: {sorted(folded)}) and does not match the folded "
-        "content digest; ledger addition is not idempotent, so a reused "
-        "id would double-count. Never reuse batch ids against a ledger — "
-        "if the stream's checkpoint was reset, resume with ids above "
-        f"{max(folded)}."
-    )
+        cols = [c for c in frame.columns if c != "batch_id"]
+        digest = lambda: ledger_content_digest(frame, cols)  # noqa: E731
+    return commit.guard_ingest(ledger_path, batch_id, job, digest)
 
 
 def stream_bloom_filter(events: DataFrame, registers_path: str, snapshot_path: str):
@@ -1302,10 +1223,11 @@ def _split_ledger_process_batch(
     # DISTRIBUTED swap (r10): the split ledger holds one row per
     # distinct digest ever seen — corpus-scale, unlike the bounded
     # register ledgers — so collecting it to the driver per batch
-    # (the old _bak_swap_write) is a 100 TB scale-killer. Same
-    # no-window crash discipline, but the merged frame writes
-    # straight to the tmp dir as a parquet job.
-    bak_swap_write_distributed(spark, merged, ledger_path)
+    # (the old _bak_swap_write) is a 100 TB scale-killer: the merged
+    # frame writes straight to the tmp dir as a parquet job.
+    commit.replace_dir(
+        ledger_path, lambda tmp: merged.write.mode("overwrite").parquet(tmp)
+    )
     snap = spark.read.parquet(ledger_path)
     assignments = (
         scored.join(snap, "dg")
@@ -1524,24 +1446,20 @@ def _dsir_check_or_stamp_target(ledger_dir: str, target_source: str) -> None:
     by WHICH source is the target, so counts ingested under one
     target silently mean something different under another. A fresh
     ledger is stamped; a mismatch refuses with a rebuild message."""
-    import json as _json
     import os
 
     stamp = os.path.join(ledger_dir, "_target.json")
-    if os.path.exists(stamp):
-        with open(stamp) as fh:
-            stored = _json.load(fh).get("target_source")
-        if stored != target_source:
-            raise ValueError(
-                f"DSIR ledger at {ledger_dir} was ingested with target "
-                f"{stored!r} but this ingest/serve uses "
-                f"{target_source!r} — rebuild the ledger (delete the "
-                "directory and replay the stream)"
-            )
-    else:
+    stored = commit.read_json(stamp)
+    if stored is None:
         os.makedirs(ledger_dir, exist_ok=True)
-        with open(stamp, "w") as fh:
-            _json.dump({"target_source": target_source}, fh)
+        commit.write_json(stamp, {"target_source": target_source})
+    elif stored.get("target_source") != target_source:
+        raise ValueError(
+            f"DSIR ledger at {ledger_dir} was ingested with target "
+            f"{stored.get('target_source')!r} but this ingest/serve uses "
+            f"{target_source!r} — rebuild the ledger (delete the "
+            "directory and replay the stream)"
+        )
 
 
 def ingest_dsir_delta(
@@ -1560,19 +1478,12 @@ def ingest_dsir_delta(
     the p-model the accumulated counts were folded under. The ledger
     is <= _DSIR_B rows per batch — model-scale, not corpus-scale."""
     from chess_pipeline_spark.plans.corpus import _dsir_gram_buckets
-    from chess_pipeline_spark.sinks import (
-        restore_bak_if_missing,
-        upsert_partition_overwrite,
-    )
+    from chess_pipeline_spark.sinks import upsert_partition_overwrite
 
-    # restore BEFORE stamping (r12 ADVICE): the stamp helper creates
-    # the live directory for a fresh ledger, and restore_bak_if_missing
-    # only restores when the live dir is MISSING — so stamping first
-    # after a compaction crash mid-swap (state in .bak) would recreate
-    # an empty live dir, turn the guard's restore into a no-op, fork
-    # the ledger, and let the next compaction rmtree the .bak with all
-    # accumulated counts (the silent loss the guard exists to prevent)
-    restore_bak_if_missing(ledger_dir)
+    # recover BEFORE stamping (r12 ADVICE): the stamp helper creates
+    # the live directory for a fresh ledger, which would shadow a
+    # crashed compaction's .bak and fork the ledger
+    commit.recover(ledger_dir)
     _dsir_check_or_stamp_target(ledger_dir, target_source)
     delta = (
         _dsir_gram_buckets(batch.select("doc_id", "source", "text"))
@@ -1631,17 +1542,16 @@ def dsir_from_ledger(spark, ledger_dir: str, docs: DataFrame) -> DataFrame:
     vanishing from both n_grams and the weight sum — r12 ADVICE; the
     serve path's point is scoring docs the model never saw); gram
     text never leaves the probe scan."""
-    import json as _json
     import os
 
     from chess_pipeline_spark.plans.corpus import _DSIR_B, _dsir_gram_buckets
-    from chess_pipeline_spark.sinks import restore_bak_if_missing
 
-    # a compaction crash mid-swap leaves the ledger (and _target.json
-    # INSIDE it) in the .bak sibling; restore before reading either
-    restore_bak_if_missing(ledger_dir)
-    with open(os.path.join(ledger_dir, "_target.json")) as fh:
-        target_source = _json.load(fh)["target_source"]
+    # the ledger and its _target.json are read wherever a crashed
+    # compaction left them (commit.readable)
+    ledger_dir = commit.readable(ledger_dir)
+    target_source = commit.read_json(os.path.join(ledger_dir, "_target.json"))[
+        "target_source"
+    ]
 
     grid = spark.range(_DSIR_B).select(F.col("id").cast("long").alias("b"))
     counts = (

@@ -46,6 +46,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from chess_pipeline_spark import commit
 from chess_pipeline_spark.functions.rounding import fround, grid_sum
 from chess_pipeline_spark.sinks import upsert_partition_overwrite
 
@@ -169,7 +170,6 @@ def build_text_index(docs: DataFrame, index_path: str) -> None:
     base's batch-0 postings/doclens/stats — the same silent-loss
     hazard class compact_text_index guards, which previously only
     armed after the FIRST compaction."""
-    import json
     import shutil
 
     shutil.rmtree(index_path, ignore_errors=True)
@@ -178,8 +178,7 @@ def build_text_index(docs: DataFrame, index_path: str) -> None:
     stamp_format(index_path, _TI_FORMAT)
     ingest_text_delta(docs, index_path, batch_id=0)
     postings_p, _, _ = _paths(index_path)
-    with open(os.path.join(postings_p, "_folded_batches.json"), "w") as fh:
-        json.dump([0], fh)
+    commit.write_json(os.path.join(postings_p, commit.FOLDED), [0])
 
 
 def ingest_text_delta(
@@ -193,14 +192,11 @@ def ingest_text_delta(
     so the probe-side semantics are unchanged by when a doc arrived.
     Callers must not assign two different deltas the same batch_id
     (the streaming wrapper gets this from the engine's epoch); ids
-    already folded into batch 0 by compact_text_index raise loudly —
-    a dynamic overwrite of a folded partition would REPLACE merged
-    base rows, the same silent-loss hazard the IVF sibling guards
-    (ann_index.ingest_ivf_batch)."""
-    from chess_pipeline_spark.sinks import (
-        check_or_stamp_format,
-        restore_bak_if_missing,
-    )
+    folded or mid-fold into batch 0 by compact_text_index raise loudly
+    (commit.guard_ingest) — a dynamic overwrite of a folded partition
+    would REPLACE merged base rows, the same silent-loss hazard the
+    IVF sibling guards (ann_index.ingest_ivf_batch)."""
+    from chess_pipeline_spark.sinks import check_or_stamp_format
 
     # ingest semantics: a stream may legitimately build the index
     # from scratch, so a fresh/empty directory gets stamped on first
@@ -209,23 +205,9 @@ def ingest_text_delta(
     check_or_stamp_format(index_path, _TI_FORMAT, "BM25 text index")
 
     postings_p, doclens_p, stats_p = _paths(index_path)
-    # a compaction crash mid-swap leaves a table (and, for postings,
-    # the folded marker INSIDE it) in the .bak sibling; restore before
-    # reading the marker or writing — otherwise the guard sees an
-    # empty marker and the partition write lands in a fresh live dir
-    # that shadows the .bak (the fork the next compaction would fold)
-    for p in (postings_p, doclens_p, stats_p):
-        restore_bak_if_missing(p)
-    folded = _read_folded(postings_p)
-    if batch_id in folded:
-        raise ValueError(
-            f"ingest_text_delta: batch_id {batch_id} was already folded into "
-            f"batch 0 by compact_text_index (folded ids: {sorted(folded)}); "
-            "overwriting a folded partition would replace merged base rows. "
-            "Never reuse batch ids against an index — if the stream's "
-            f"checkpoint was reset, resume ingest with ids above "
-            f"{max(folded)}."
-        )
+    for p in (doclens_p, stats_p):
+        commit.recover(p)
+    commit.guard_ingest(postings_p, batch_id, "ingest_text_delta")
     postings, lens = _tokenized(delta_docs)
     # r14: overlapping these two writes from a 2-thread pool (the
     # guide §2.6 move that won 0.74x on the IVF audit) measured FLAT
@@ -268,21 +250,6 @@ def ingest_text_delta(
     upsert_partition_overwrite(delta_stats, stats_p, ["batch_id"])
 
 
-def _read_folded(postings_dir: str) -> set[int]:
-    """batch_ids already folded into batch 0, from the
-    `_folded_batches.json` sidecar INSIDE the postings directory
-    (Spark ignores underscore-prefixed files, and the marker renames
-    atomically with the table it describes — the ann_index.py
-    discipline). Empty until the first compaction."""
-    import json
-
-    p = os.path.join(postings_dir, "_folded_batches.json")
-    if os.path.exists(p):
-        with open(p) as fh:
-            return set(json.load(fh))
-    return set()
-
-
 def compact_text_index(
     spark: SparkSession, index_path: str, rewrite: bool = False
 ) -> None:
@@ -301,46 +268,25 @@ def compact_text_index(
     (guide §1.2 — make maintenance delta-proportional): postings and
     doclens fold by RENAMING each batch's parquet files into the
     batch-0 directories — zero Spark jobs, zero bytes rewritten, cost
-    proportional to delta FILE COUNT, not table size. os.rename is
-    atomic and removes the source, so every row lives in exactly one
-    directory at any crash instant, and probes (which never filter on
-    batch_id) read each row exactly once throughout. Only the stats
-    table still runs a (one-job, ≤#batches-row) Spark rewrite, via
-    the tmp → .bak → rename swap, because its fold is a SUM, not a
-    move.
-
-    The `_folded_batches.json` marker is updated BEFORE the first
-    move: a replayed ingest of a mid-fold batch would dynamic-
-    overwrite only the partitions still under its own batch_id —
-    rows already moved to batch 0 are out of its reach — so the
-    folded-id guard must refuse the replay from the instant the fold
-    starts. (Rows are never lost in that window: a batch reaches
-    compaction only after its ingest committed, and the marker-then-
-    move order is crash-monotone — a re-run finishes the moves from
-    the surviving directories.)
-
-    Parity anchor: ann_index.compact_ivf_index (same move-based
-    minor fold; its delta is probe-filtered by the marker, so it
-    orders marker AFTER moves — the guards differ deliberately).
+    proportional to delta FILE COUNT, not table size. Every row lives
+    in exactly one directory at any crash instant, and probes (which
+    never filter on batch_id) read each row exactly once throughout.
+    Only the stats table still runs a (one-job, ≤#batches-row) Spark
+    rewrite, swapped in by commit.replace_dir, because its fold is a
+    SUM, not a move. The fold runs in commit.folding's marker order —
+    the same as ann_index.compact_ivf_index — so a replayed ingest of
+    a mid-fold batch, whose moved rows its partition overwrite could
+    no longer reach, is refused, and a re-run finishes the moves from
+    the surviving directories.
 
     `rewrite=True` is the MAJOR compaction (ann_index parity): each
-    table re-reads as batch 0 and rewrites through the tmp → .bak →
-    rename swap, consolidating the file count a run of minor folds
-    accumulated. Runs even when there is nothing new to fold —
-    hygiene is its purpose. Probe results identical either way."""
-    import json
-    import shutil
-    import uuid
-
-    from chess_pipeline_spark.sinks import clean_stale_tmp_dirs
-
+    table re-reads as batch 0 and is swapped in whole, consolidating
+    the file count a run of minor folds accumulated. Runs even when
+    there is nothing new to fold — hygiene is its purpose. Probe
+    results identical either way."""
     postings_p, doclens_p, stats_p = _paths(index_path)
     for p in (postings_p, doclens_p, stats_p):
-        bak = f"{p}.__bak__"
-        if not os.path.exists(p) and os.path.exists(bak):
-            # crashed between the two renames: the .bak IS the table
-            os.rename(bak, p)
-        clean_stale_tmp_dirs(p)
+        commit.recover(p)
         _sweep_empty_batch_dirs(p)
     if not os.path.exists(postings_p):
         return
@@ -352,31 +298,13 @@ def compact_text_index(
         # emptied-by-a-crashed-move dirs above) — an os.scandir
         # answers what a parquet read + distinct + collect paid a
         # Spark job for, three times per compaction. LOCAL FILESYSTEM
-        # ONLY (r14 ADVICE) — like the swap/rename logic and ingest's
-        # has_lens scandir; an object-store backend ports them all.
+        # ONLY (r14 ADVICE), like the commit module.
         return {
             int(e.name.split("=", 1)[1])
             for e in os.scandir(path)
             if e.is_dir() and e.name.startswith("batch_id=")
         }
 
-    def swap(path: str, write_tmp, marker_payload=None) -> None:
-        tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
-        write_tmp(tmp)
-        if marker_payload is not None:
-            # the folded marker must ride INSIDE the swapped table so
-            # it renames atomically with the base it describes (and a
-            # rewrite never disarms the ingest id-reuse guard)
-            with open(os.path.join(tmp, "_folded_batches.json"), "w") as fh:
-                json.dump(marker_payload, fh)
-        bak = f"{path}.__bak__"
-        if os.path.exists(bak):
-            shutil.rmtree(bak)
-        os.rename(path, bak)
-        os.rename(tmp, path)
-        shutil.rmtree(bak)
-
-    folded = _read_folded(postings_p)
     p_ids, d_ids, s_ids = (
         batch_ids(postings_p),
         batch_ids(doclens_p),
@@ -403,66 +331,57 @@ def compact_text_index(
             "would bake the partial batch into batch 0 and the folded-id "
             "guard would refuse the healing replay."
         )
-    if all_ids <= {0} and not folded and not rewrite:
-        return  # fresh build, nothing ever ingested: a no-op
-    marker = sorted(folded | all_ids)
-    if set(marker) != folded:
-        # marker FIRST (atomicity note in the docstring): from here a
-        # replayed ingest of any batch being folded raises instead of
-        # overwriting partitions whose rows may already sit in batch 0
-        tmp_m = os.path.join(postings_p, "_folded_batches.json.tmp")
-        with open(tmp_m, "w") as fh:
-            json.dump(marker, fh)
-        os.replace(tmp_m, os.path.join(postings_p, "_folded_batches.json"))
-
-    if rewrite:
-        # major: re-read each table as batch 0 and swap in one
-        # AQE-sized write — consolidates the minor folds' file count
-        for path, parts in (
-            (postings_p, ["batch_id", "bucket"]),
-            (doclens_p, ["batch_id"]),
-        ):
-            # REBALANCE by the leaf partition column (guide §6) so the
-            # consolidated write emits few AQE-sized files per
-            # directory — file-count hygiene is the major's purpose
-            merged = spark.read.parquet(path).withColumn(
-                "batch_id", F.lit(0)
+    in_flight = commit.read_folding(postings_p)
+    if all_ids <= {0} and not in_flight and not rewrite:
+        return  # nothing ingested beyond the base: a no-op
+    with commit.folding(postings_p, all_ids):
+        if rewrite:
+            # major: re-read each table as batch 0 and swap in one
+            # AQE-sized write — consolidates the minor folds' file count
+            for path, parts in (
+                (postings_p, ["batch_id", "bucket"]),
+                (doclens_p, ["batch_id"]),
+            ):
+                # REBALANCE by the leaf partition column (guide §6) so
+                # the consolidated write emits few AQE-sized files per
+                # directory — file-count hygiene is the major's purpose
+                merged = spark.read.parquet(path).withColumn(
+                    "batch_id", F.lit(0)
+                )
+                merged = (
+                    merged.hint("rebalance", "bucket")
+                    if path == postings_p
+                    else merged.hint("rebalance")
+                )
+                commit.replace_dir(
+                    path,
+                    lambda t, m=merged, pc=parts: m.write.partitionBy(*pc)
+                    .mode("overwrite")
+                    .parquet(t),
+                )
+        else:
+            # postings: batch_id=N/bucket=B files → batch_id=0/bucket=B
+            _move_batches_into_zero(postings_p, nested=True)
+            # doclens: batch_id=N files → batch_id=0
+            _move_batches_into_zero(doclens_p, nested=False)
+        # stats: the fold is a SUM — one tiny Spark job over ≤#batches
+        # rows, swapped in whole (post-fold the table is a single
+        # summed batch-0 row by construction)
+        if s_ids != {0}:
+            summed = (
+                spark.read.parquet(stats_p)
+                .agg(
+                    F.sum("n_docs").cast("long").alias("n_docs"),
+                    F.sum("total_len").cast("long").alias("total_len"),
+                )
+                .withColumn("batch_id", F.lit(0))
             )
-            merged = (
-                merged.hint("rebalance", "bucket")
-                if path == postings_p
-                else merged.hint("rebalance")
-            )
-            swap(
-                path,
-                lambda t, m=merged, pc=parts: m.write.partitionBy(*pc)
+            commit.replace_dir(
+                stats_p,
+                lambda t: summed.write.partitionBy("batch_id")
                 .mode("overwrite")
                 .parquet(t),
-                marker_payload=marker if path == postings_p else None,
             )
-    else:
-        # postings: move batch_id=N/bucket=B files into batch_id=0/bucket=B
-        _move_batches_into_zero(postings_p, nested=True)
-        # doclens: move batch_id=N files into batch_id=0
-        _move_batches_into_zero(doclens_p, nested=False)
-    # stats: the fold is a SUM — one tiny Spark job over ≤#batches
-    # rows, swapped atomically (post-fold the table is a single
-    # summed batch-0 row by construction)
-    if s_ids != {0}:
-        summed = (
-            spark.read.parquet(stats_p)
-            .agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("total_len").cast("long").alias("total_len"),
-            )
-            .withColumn("batch_id", F.lit(0))
-        )
-        swap(
-            stats_p,
-            lambda t: summed.write.partitionBy("batch_id")
-            .mode("overwrite")
-            .parquet(t),
-        )
 
 
 def _sweep_empty_batch_dirs(table_dir: str) -> None:
@@ -485,33 +404,12 @@ def _sweep_empty_batch_dirs(table_dir: str) -> None:
             os.rmdir(b.path)
 
 
-def _move_data_files(src_dir: str, dest_dir: str, prefix: str) -> None:
-    """Rename every data file in src_dir into dest_dir under
-    prefix+name, carrying each file's Hadoop `.{name}.crc` checksum
-    sidecar along (renamed to match, so local-fs checksum
-    verification stays intact), then clear hidden residue and drop
-    src_dir. os.rename is atomic per file. LOCAL FILESYSTEM ONLY,
-    like every sidecar helper here."""
-    os.makedirs(dest_dir, exist_ok=True)
-    for f in os.scandir(src_dir):
-        if f.is_file() and not f.name.startswith(("_", ".")):
-            crc = os.path.join(src_dir, f".{f.name}.crc")
-            if os.path.exists(crc):
-                os.rename(
-                    crc, os.path.join(dest_dir, f".{prefix}{f.name}.crc")
-                )
-            os.rename(f.path, os.path.join(dest_dir, f"{prefix}{f.name}"))
-    for leftover in os.scandir(src_dir):
-        if leftover.is_file() and leftover.name.startswith(("_", ".")):
-            os.remove(leftover.path)
-    os.rmdir(src_dir)
-
-
 def _move_batches_into_zero(table_dir: str, nested: bool) -> None:
-    """Rename every batch_id=N>0 partition's data files into the
+    """Move every batch_id=N>0 partition's data files into the
     batch_id=0 layout (same bucket subdir when nested), prefixing
     with bN- so names stay unique, then drop the emptied batch dirs.
-    Pure os.rename — atomic per file, no Spark, delta-proportional."""
+    commit.move_data_files — atomic per file, no Spark,
+    delta-proportional."""
     zero = os.path.join(table_dir, "batch_id=0")
     for b in sorted(os.scandir(table_dir), key=lambda e: e.name):
         if not (b.is_dir() and b.name.startswith("batch_id=")):
@@ -522,14 +420,14 @@ def _move_batches_into_zero(table_dir: str, nested: bool) -> None:
         if nested:
             for bucket in sorted(os.scandir(b.path), key=lambda e: e.name):
                 if bucket.is_dir():
-                    _move_data_files(
+                    commit.move_data_files(
                         bucket.path,
                         os.path.join(zero, bucket.name),
                         f"b{bid}-",
                     )
         else:
-            _move_data_files(b.path, zero, f"b{bid}-")
-            continue  # _move_data_files already dropped the dir
+            commit.move_data_files(b.path, zero, f"b{bid}-")
+            continue  # move_data_files already dropped the dir
         for leftover in os.scandir(b.path):
             if leftover.is_file() and leftover.name.startswith(("_", ".")):
                 os.remove(leftover.path)
@@ -549,7 +447,7 @@ def probe_bm25(
     from chess_pipeline_spark.sinks import require_format
 
     require_format(index_path, _TI_FORMAT, "BM25 text index")
-    postings_p, doclens_p, stats_p = _paths(index_path)
+    postings_p, doclens_p, stats_p = map(commit.readable, _paths(index_path))
     import hashlib
 
     buckets = sorted(

@@ -741,8 +741,8 @@ def test_minor_fold_moves_files_and_survives_mid_fold_crash(
     import pytest
     import pyspark.sql.functions as F
 
+    from chess_pipeline_spark.commit import read_folded as _read_folded
     from chess_pipeline_spark.ann_index import (
-        _read_folded,
         _read_lists,
         build_ivf_index,
         compact_ivf_index,
@@ -766,7 +766,7 @@ def test_minor_fold_moves_files_and_survives_mid_fold_crash(
     # manufacture the mid-fold crash: folding marker written, SOME
     # delta files moved (exactly what the move loop does for a strict
     # subset of list dirs), then "crash"
-    from chess_pipeline_spark.ann_index import _write_json_atomic
+    from chess_pipeline_spark.commit import write_json as _write_json_atomic
 
     lists_p, delta_p = os.path.join(idx, "lists"), os.path.join(idx, "lists_delta")
     _write_json_atomic(os.path.join(lists_p, "_folding_batches.json"), [7])
@@ -820,8 +820,8 @@ def test_ivf_major_rewrite_consolidates_without_a_delta(
     import pyspark.sql.functions as F
     import pytest
 
+    from chess_pipeline_spark.commit import read_folded as _read_folded
     from chess_pipeline_spark.ann_index import (
-        _read_folded,
         build_ivf_index,
         compact_ivf_index,
         ingest_ivf_batch,

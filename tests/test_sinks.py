@@ -52,6 +52,41 @@ def test_upsert_parquet_idempotent(spark, tmp_path):
     assert _rows(spark.read.parquet(path)) == [(1, 10), (2, 20)]
 
 
+def test_upsert_parquet_crash_before_final_rename_loses_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """A crash just before the rename that moves the new table into
+    place must leave the full table recoverable: the retried upsert
+    sees all 100 old rows plus the batch (101), and no `.__tmp__`
+    orphan survives the retry."""
+    path = str(tmp_path / "target")
+    upsert_parquet(spark.range(100).toDF("k"), path, keys=["k"])
+    batch = spark.createDataFrame([(100,)], "k long")
+
+    real_rename, real_replace = os.rename, os.replace
+
+    def crash_on_install(rename):
+        def go(src, dst, *a, **kw):
+            if os.fspath(dst) == path and ".__tmp__" in os.fspath(src):
+                raise OSError("injected crash before the install rename")
+            return rename(src, dst, *a, **kw)
+
+        return go
+
+    monkeypatch.setattr(os, "rename", crash_on_install(real_rename))
+    monkeypatch.setattr(os, "replace", crash_on_install(real_replace))
+    try:
+        upsert_parquet(batch, path, keys=["k"])
+    except OSError:
+        pass
+    monkeypatch.setattr(os, "rename", real_rename)
+    monkeypatch.setattr(os, "replace", real_replace)
+
+    upsert_parquet(batch, path, keys=["k"])
+    assert _rows(spark.read.parquet(path)) == [(i,) for i in range(101)]
+    assert not [n for n in os.listdir(tmp_path) if ".__tmp__" in n]
+
+
 def test_upsert_partition_overwrite_touches_only_batch_partitions(spark, tmp_path):
     path = str(tmp_path / "part_target")
     day1 = spark.createDataFrame(

@@ -334,7 +334,8 @@ def test_build_reserves_batch_zero(spark, sf_dir, tmp_path):
 
     import pytest
 
-    from chess_pipeline_spark.text_index import _read_folded, compact_text_index
+    from chess_pipeline_spark.commit import read_folded as _read_folded
+    from chess_pipeline_spark.text_index import compact_text_index
 
     docs = load_table(spark, sf_dir, "documents")
     idx = str(tmp_path / "tix")
@@ -446,8 +447,8 @@ def test_move_fold_mid_crash_probe_exact_and_replay_refused(
 
     import pytest
 
+    from chess_pipeline_spark.commit import move_data_files as _move_data_files
     from chess_pipeline_spark.text_index import (
-        _move_data_files,
         compact_text_index,
     )
 
@@ -501,8 +502,8 @@ def test_major_rewrite_consolidates_and_keeps_the_folded_marker(
 
     import pytest
 
+    from chess_pipeline_spark.commit import read_folded as _read_folded
     from chess_pipeline_spark.text_index import (
-        _read_folded,
         compact_text_index,
     )
 
