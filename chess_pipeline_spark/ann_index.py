@@ -175,7 +175,7 @@ def build_ivf_index(
     # the measured optimum, so the extra driver round-trips stay. The
     # independent r13 wins are KEPT: the _meta.json geometry sidecar
     # (still written below — probes/ingests stay job-free for
-    # dim/k_cb) and the scandir delta-batch discovery.
+    # dim/k_cb) and the filesystem delta-batch discovery.
     # r14 (guide §2.6): the three seed-stage driver actions — the
     # seeds checkpoint, the PQ-codebook checkpoint, and the dim probe
     # (`first()`) — are data-independent jobs the old code ran
@@ -297,9 +297,7 @@ def build_ivf_index(
         ]
         for f in futs:
             f.result()
-    from chess_pipeline_spark.sinks import stamp_format
-
-    stamp_format(out_path, _IVF_FORMAT)
+    commit.stamp(out_path, _IVF_FORMAT)
     # k_cb: the codebook write truncates at the corpus size when the
     # corpus has fewer than _PQ_K vectors (limit semantics)
     n_cb = codebook.count()
@@ -477,9 +475,9 @@ def ingest_ivf_batch(
     committed yet) the folded rows are already in the base and the
     replay is safe to drop; for a fresh checkpoint over NEW data,
     re-ingest under ids above max(folded)."""
-    from chess_pipeline_spark.sinks import require_format, upsert_partition_overwrite
+    from chess_pipeline_spark.sinks import upsert_partition_overwrite
 
-    require_format(index_path, _IVF_FORMAT, "IVF/ADC index")
+    commit.check_stamp(index_path, _IVF_FORMAT, "IVF/ADC index")
     spark = batch.sparkSession
     commit.guard_ingest(
         os.path.join(index_path, "lists"), batch_id, "ingest_ivf_batch"
@@ -520,7 +518,7 @@ def compact_ivf_index(
 
     Default (r14, guide §6/§1.2 — make maintenance delta-proportional):
     a MINOR fold that moves the delta's parquet files into the base's
-    list_id directories (commit.move_data_files) — zero Spark jobs,
+    list_id directories (commit.fold_batches) — zero Spark jobs,
     zero bytes rewritten, cost proportional to the number of delta
     FILES rather than the base size. Base and delta files carry the
     identical physical schema by construction (_encode_rows wrote
@@ -545,32 +543,16 @@ def compact_ivf_index(
     if not os.path.exists(lists_path):
         return
     folded = commit.read_folded(lists_path)
-    # r13: the delta's batch ids are its partition DIRECTORY names —
-    # an os.scandir answers what a distinct().collect() paid a Spark
-    # job for, from the same source Spark's partition discovery reads
-    pending = (
-        _delta_batch_ids_fs(delta_path) - folded
-        if os.path.exists(delta_path)
-        else set()
-    )
+    pending = commit.batch_ids(delta_path, "ingest_batch") - folded
     with commit.folding(lists_path, pending) as todo:
         # delta files of an already-folded batch are stale copies of
         # base rows (probes filter them out): only the rest moves in
         fresh = todo - folded
         if rewrite:
             _compact_rewrite(spark, lists_path, delta_path, folded | todo, fresh)
-        elif fresh and os.path.exists(delta_path):
-            for lid in list(os.scandir(delta_path)):
-                if not (lid.is_dir() and lid.name.startswith("list_id=")):
-                    continue
-                for b in list(os.scandir(lid.path)):
-                    if not (b.is_dir() and b.name.startswith("ingest_batch=")):
-                        continue
-                    bid = int(b.name.split("=", 1)[1])
-                    if bid in fresh:
-                        commit.move_data_files(
-                            b.path, os.path.join(lists_path, lid.name), f"b{bid}-"
-                        )
+        else:
+            # lists_delta/list_id=L/ingest_batch=B/f → lists/list_id=L/bB-f
+            commit.fold_batches(delta_path, "ingest_batch", fresh, lists_path)
     shutil.rmtree(delta_path, ignore_errors=True)
 
 
@@ -586,7 +568,7 @@ def _compact_rewrite(
     with the `folded` marker inside — it lands atomically with the
     rows it covers, so probes never read a folded delta row twice."""
     merged = spark.read.parquet(lists_path)
-    if new_batches and os.path.exists(delta_path) and _delta_has_files(delta_path):
+    if new_batches and commit.has_data(delta_path):
         delta = (
             spark.read.parquet(delta_path)
             .filter(F.col("ingest_batch").isin(sorted(new_batches)))
@@ -603,38 +585,6 @@ def _compact_rewrite(
     )
 
 
-def _delta_batch_ids_fs(delta_path: str) -> set[int]:
-    """ingest_batch ids present in a (list_id, ingest_batch)-
-    partitioned delta, from the second-level partition directory
-    names — the same dirs Spark's partition discovery parses, without
-    a job. Spark's writers never leave an empty partition directory,
-    so the listing equals the distinct column values.
-
-    LOCAL FILESYSTEM ONLY (r14 ADVICE): os.scandir binds index paths
-    to a POSIX fs, like the commit module — the distinct().collect()
-    this replaced worked through any Hadoop FS. An object-store
-    backend ports this helper along with chess_pipeline_spark.commit."""
-    ids: set[int] = set()
-    for lid in os.scandir(delta_path):
-        if not (lid.is_dir() and lid.name.startswith("list_id=")):
-            continue
-        for b in os.scandir(lid.path):
-            if b.is_dir() and b.name.startswith("ingest_batch="):
-                ids.add(int(b.name.split("=", 1)[1]))
-    return ids
-
-
-def _delta_has_files(delta_path: str) -> bool:
-    """True iff the delta holds at least one data file. A move-based
-    fold that crashed after its last rename can leave only EMPTY
-    partition directories behind — a parquet read of that raises
-    (no schema), so readers check this first."""
-    for root, _dirs, files in os.walk(delta_path):
-        if any(not f.startswith(("_", ".")) for f in files):
-            return True
-    return False
-
-
 def _read_lists(spark: SparkSession, index_path: str) -> DataFrame:
     """Base lists plus any un-compacted ingest delta (same schema by
     construction — _encode_rows built both). Partition pruning on
@@ -643,13 +593,11 @@ def _read_lists(spark: SparkSession, index_path: str) -> DataFrame:
     is read wherever it is (commit.readable), and delta batches its
     folded marker already covers are excluded, so a probe racing (or
     crashed out of) a compaction never reads a folded row twice."""
-    from chess_pipeline_spark.sinks import require_format
-
-    require_format(index_path, _IVF_FORMAT, "IVF/ADC index")
+    commit.check_stamp(index_path, _IVF_FORMAT, "IVF/ADC index")
     lists_path = commit.readable(os.path.join(index_path, "lists"))
     lists = spark.read.parquet(lists_path)
     delta_path = os.path.join(index_path, "lists_delta")
-    if os.path.exists(delta_path) and _delta_has_files(delta_path):
+    if commit.has_data(delta_path):
         delta = spark.read.parquet(delta_path)
         folded = commit.read_folded(lists_path)
         if folded and "ingest_batch" in delta.columns:
@@ -683,8 +631,6 @@ def probe_ivf_index(
         F.col("list_id").alias("probe_list"),
     ).withColumn("qnorm", F.expr(_NORM.format(v="qe")))
     lists = _read_lists(spark, index_path)
-    if "nrm" not in lists.columns:  # pre-r5 index layout
-        lists = lists.withColumn("nrm", F.expr(_NORM.format(v="embedding")))
     if coded:
         # score against the dequantized int8 codes — the float
         # embedding column is never read (check ReadSchema), which is
@@ -696,18 +642,12 @@ def probe_ivf_index(
                 "no 'code' column (built before int8 codes existed); "
                 "rebuild with build_ivf_index or probe with coded=False"
             )
-        from pyspark.sql.types import ByteType
-
-        code_elem = lists.schema["code"].dataType.elementType
-        # current layout stores zero-centered tinyint levels
-        # (level-128); a pre-r6 index stored raw 0..255 ints — decode
-        # each with its own affine so both layouts stay probe-able
-        offset = "+ 128.0" if isinstance(code_elem, ByteType) else ""
+        # codes are zero-centered tinyint levels (level - 128)
         lists = lists.select(
             "vec_id",
             "list_id",
             F.expr(
-                f"transform(code, c -> (CAST(c AS DOUBLE) {offset}) * q_scale + q_mn)"
+                "transform(code, c -> (CAST(c AS DOUBLE) + 128.0) * q_scale + q_mn)"
             ).alias("embedding"),
         ).withColumn("nrm", F.expr(_NORM.format(v="embedding")))
     cos = F.expr(_DOT.format(u="qe", v="embedding")) / (

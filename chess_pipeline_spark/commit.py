@@ -25,6 +25,16 @@ folded (`_folded_batches.json`).
   files in several steps: `_folding_batches.json` is written before
   the first move, `_folded_batches.json` after the last, and
   ``guard_ingest`` refuses a batch id listed in either.
+* ``batch_ids`` / ``fold_batches`` — the one reading of the batch
+  partition layout (`batch_id=N` or `ingest_batch=N` directories, at
+  any depth): a batch is a partition directory that holds a data
+  file, so a fold that crashed after its last move leaves no ghost
+  batch behind; a fold moves a batch's files, each prefixed `b{id}-`,
+  out of its partition directory and re-roots them under the target.
+* ``stamp`` / ``check_stamp`` — the one identity stamp (`_format.json`
+  for index formats, `_target.json` for the DSIR target): a stamp
+  naming another value refuses, unstamped data refuses, ingest stamps
+  a fresh directory, a probe of a missing one defers to its reader.
 * Every rename, file move and sidecar replace is one ``_rename``
   (``os.replace``), so each step is atomic and a crash can strike
   only between steps.
@@ -47,6 +57,8 @@ TMP = ".__tmp__"
 FOLDED = "_folded_batches.json"
 FOLDING = "_folding_batches.json"
 DIGESTS = "_folded_digests.json"
+FORMAT = "_format.json"
+TARGET = "_target.json"
 
 
 def _rename(src: str, dst: str) -> None:
@@ -137,22 +149,111 @@ def replace_dir(path: str, write, sidecars: dict | None = None) -> None:
     shutil.rmtree(bak, ignore_errors=True)
 
 
+def _data_files(top: str):
+    """(directory, name) of every data file under ``top`` — the files a
+    parquet reader lists; underscore and dot names (stamps, markers,
+    `_SUCCESS`, Hadoop `.crc` checksums) are not data."""
+    for dirpath, _dirs, files in os.walk(top):
+        for name in files:
+            if not name.startswith(("_", ".")):
+                yield dirpath, name
+
+
+def has_data(top: str) -> bool:
+    """Whether any data file sits under ``top`` (False when absent)."""
+    return next(_data_files(top), None) is not None
+
+
+def _partitions(root: str, col: str):
+    """(id, path) of every `col=id` partition directory under ``root``,
+    at whatever depth the layout puts the batch column."""
+    for dirpath, dirs, _files in os.walk(root):
+        for d in [d for d in dirs if d.startswith(col + "=")]:
+            dirs.remove(d)
+            yield int(d[len(col) + 1 :]), os.path.join(dirpath, d)
+
+
+def batch_ids(root: str, col: str) -> set[int]:
+    """Ids of the `col=id` partitions under ``root`` that hold a data
+    file — the values a distinct() over the column would return,
+    without a Spark job. An emptied partition directory (what a fold
+    leaves when it crashes after its last move) is not a batch."""
+    return {bid for bid, path in _partitions(root, col) if has_data(path)}
+
+
 def move_data_files(src_dir: str, dest_dir: str, prefix: str) -> None:
     """Rename every data file of ``src_dir`` into ``dest_dir`` as
     prefix+name, its Hadoop `.{name}.crc` checksum first (so local-fs
-    verification stays intact), then drop the emptied ``src_dir``.
-    Each file is in exactly one of the two directories at any instant."""
+    verification stays intact). Each file is in exactly one of the two
+    directories at any instant."""
     os.makedirs(dest_dir, exist_ok=True)
-    for f in os.scandir(src_dir):
+    for f in list(os.scandir(src_dir)):
         if f.is_file() and not f.name.startswith(("_", ".")):
             crc = os.path.join(src_dir, f".{f.name}.crc")
             if os.path.exists(crc):
                 _rename(crc, os.path.join(dest_dir, f".{prefix}{f.name}.crc"))
             _rename(f.path, os.path.join(dest_dir, f"{prefix}{f.name}"))
-    for leftover in os.scandir(src_dir):
-        if leftover.is_file():
-            os.remove(leftover.path)
-    os.rmdir(src_dir)
+
+
+def fold_batches(root: str, col: str, ids, dest: str) -> None:
+    """Move the data files of each `col=id` partition under ``root``
+    whose id is in ``ids`` to ``dest``: the `col=id` path component is
+    dropped, the rest of the path is re-rooted under ``dest``, and each
+    file is prefixed `b{id}-` so names stay unique — e.g.
+    `root/list_id=3/ingest_batch=7/f` → `dest/list_id=3/b7-f`. The
+    emptied partition directories are removed afterwards."""
+    for bid, part in sorted(_partitions(root, col)):
+        if bid not in ids:
+            continue
+        above = os.path.relpath(os.path.dirname(part), root)
+        for src in sorted({d for d, _ in _data_files(part)}):
+            below = os.path.relpath(src, part)
+            move_data_files(
+                src, os.path.normpath(os.path.join(dest, above, below)), f"b{bid}-"
+            )
+        shutil.rmtree(part)
+
+
+def stamp(
+    dir_path: str, value: str, *, sidecar: str = FORMAT, key: str = "format"
+) -> None:
+    """Write the identity stamp ``{key: value}`` into ``dir_path``
+    (created if absent), replacing any old one — the build path, whose
+    intent is a rebuild, so the stamp follows the new bytes."""
+    os.makedirs(dir_path, exist_ok=True)
+    write_json(os.path.join(dir_path, sidecar), {key: value})
+
+
+def check_stamp(
+    dir_path: str,
+    value: str,
+    what: str,
+    *,
+    sidecar: str = FORMAT,
+    key: str = "format",
+    fresh: bool = False,
+) -> None:
+    """Refuse a directory whose stamp names another ``value``, or that
+    holds data files but no stamp (it cannot be verified). An
+    unstamped directory without data passes: with ``fresh`` (the
+    ingest path) it is stamped; without (the probe path) a missing
+    table is left to fail in its reader as exactly that."""
+    stored = read_json(os.path.join(dir_path, sidecar))
+    fix = "rebuild it (delete the directory, then rebuild or replay into it)"
+    if stored is not None:
+        if stored.get(key) != value:
+            raise ValueError(
+                f"{what} at {dir_path} was written with "
+                f"{key.replace('_', ' ')} {stored.get(key)!r}, but "
+                f"{value!r} is expected — {fix}"
+            )
+    elif has_data(dir_path):
+        raise ValueError(
+            f"{what} at {dir_path} predates format stamping and cannot "
+            f"be verified against {value!r} — {fix}"
+        )
+    elif fresh:
+        stamp(dir_path, value, sidecar=sidecar, key=key)
 
 
 @contextmanager

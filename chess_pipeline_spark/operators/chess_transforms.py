@@ -46,23 +46,6 @@ def strip_fen_move_counter(fen: Column) -> Column:
     return F.regexp_replace(fen, r"\s\d+$", "")
 
 
-def parse_eval_comment(comment: Column) -> Column:
-    """UCI 'score (cp|mate) N' -> signed pawn evaluation.
-
-    cp -> N/100; mate -> +-9999 by sign. Reference:
-    parse_remote_eval (transforms.py:186-212, mate pre-scale 999900
-    then /100).
-    """
-    kind = F.regexp_extract(comment, r"score (cp|mate) (-?\d+)", 1)
-    val = F.regexp_extract(comment, r"score (cp|mate) (-?\d+)", 2).cast("double")
-    return (
-        F.when(kind == "cp", val / 100.0)
-        .when((kind == "mate") & (val >= 0), F.lit(9999.0))
-        .when((kind == "mate") & (val < 0), F.lit(-9999.0))
-        .otherwise(F.lit(None).cast("double"))
-    )
-
-
 _RESULT_MAP = {
     ("1-0", "white"): "Win",
     ("1-0", "black"): "Loss",

@@ -49,13 +49,12 @@ class GameEtlOutput:
     game_materials: DataFrame
     position_evals: DataFrame
     win_probabilities: DataFrame
-    # the persisted cleaned frame (None when persist_cleaned=False);
-    # exposed so callers / materialize() can release executor memory
-    cleaned: DataFrame | None = None
+    # the persisted cleaned frame, exposed so callers / materialize()
+    # can release executor memory
+    cleaned: DataFrame
 
     def unpersist(self) -> None:
-        if self.cleaned is not None:
-            self.cleaned.unpersist()
+        self.cleaned.unpersist()
 
     def tables(self) -> dict[str, DataFrame]:
         return {
@@ -74,7 +73,6 @@ def run_game_etl(
     json_games: DataFrame,
     player: str,
     eval_cache: DataFrame,
-    persist_cleaned: bool = True,
 ) -> GameEtlOutput:
     """raw PGN rows + raw JSON rows -> the seven reference tables.
 
@@ -85,9 +83,7 @@ def run_game_etl(
     (operators/evals.fetch_missing) deliberately outside this pure
     plan.
     """
-    cleaned = clean_df(pgn, json_games)
-    if persist_cleaned:
-        cleaned = cleaned.persist()
+    cleaned = clean_df(pgn, json_games).persist()
 
     games = transform_game_data(cleaned, player)
     moves = explode_moves(cleaned)
@@ -113,7 +109,7 @@ def run_game_etl(
         game_materials=materials,
         position_evals=new_cache,
         win_probabilities=win_probs,
-        cleaned=cleaned if persist_cleaned else None,
+        cleaned=cleaned,
     )
 
 
@@ -325,14 +321,12 @@ def materialize_corpus(out: CorpusEtlOutput, base_path: str) -> None:
         upsert_parquet(df, f"{base_path}/{name}", ["doc_id"])
 
 
-def materialize(
-    out: GameEtlOutput, base_path: str, keys: dict[str, list[str]] | None = None
-) -> None:
+def materialize(out: GameEtlOutput, base_path: str) -> None:
     """The seven load_* steps as idempotent parquet upserts
     (postgres_templates.py:13-157 -> sinks.upsert_parquet)."""
     from chess_pipeline_spark.sinks import upsert_parquet
 
-    default_keys = {
+    keys = {
         "chess_games": ["player", "game_link"],
         "game_moves": ["game_link", "half_move"],
         "game_clocks": ["game_link", "half_move"],
@@ -341,7 +335,6 @@ def materialize(
         "position_evals": ["fen"],
         "win_probabilities": ["game_link", "half_move"],
     }
-    keys = {**default_keys, **(keys or {})}
     # position_evals LAST: win_probabilities' lazy plan reads the
     # eval cache, which in the incremental flow IS the old
     # {base_path}/position_evals files — upserting that table first

@@ -1993,9 +1993,7 @@ def _dsir_gram_buckets(d: DataFrame) -> DataFrame:
     )
 
 
-def dsir_importance_weights(
-    spark: SparkSession, sf_dir: str, postings: str | None = None
-) -> DataFrame:
+def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document DSIR importance log-weight — hashed n-gram
     importance resampling (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): fit two
@@ -2030,31 +2028,12 @@ def dsir_importance_weights(
     corpus-SCALE pin in the catalog (~2 GB at 500k docs), and it
     coexists with the per-doc rollup's concurrent hash-aggs — the
     DSIRSOAK_r12 law run needed >8 g heap at 500k docs under the
-    default. ``postings`` (or env SPARK_GRAFT_DSIR_POSTINGS) picks
-    the trade-off, all three modes byte-identical in output
-    (tests/test_dsir_ledger.py pins the equality):
-
-    * ``checkpoint`` (default) — localCheckpoint, memory+disk pin;
-      fastest, highest heap floor.
-    * ``disk`` — localCheckpoint at DISK_ONLY: same one-tokenize
-      plan and release discipline, but the pinned partitions never
-      occupy storage heap, so the rollup's execution memory gets the
-      whole pool (the 8 g escape hatch; A/B cost in SCALING.md).
-    * ``recompute`` — no pin at all: the tokenize stage runs twice
-      (model fit + scoring). Zero pin; right when a second corpus
-      scan is cheaper than the postings footprint (small corpora or
-      heavily filtered scans).
+    default. The pin goes through checkpoints.pin_corpus_frame, so
+    env SPARK_GRAFT_CORPUS_PINS picks the trade-off (`disk` is the
+    8 g escape hatch, `recompute` tokenizes twice and pins nothing;
+    A/B cost in SCALING.md), all modes byte-identical in output
+    (tests/test_dsir_ledger.py pins the equality).
     """
-    import os
-
-    mode = postings or os.environ.get(
-        "SPARK_GRAFT_DSIR_POSTINGS", "checkpoint"
-    )
-    if mode not in ("checkpoint", "disk", "recompute"):
-        raise ValueError(
-            f"dsir_importance_weights: unknown postings mode {mode!r} "
-            "(expected 'checkpoint', 'disk', or 'recompute')"
-        )
     from chess_pipeline_spark.checkpoints import pin_corpus_frame
 
     d = spread(_L(spark, sf_dir, "documents"), "doc_id").select(
@@ -2068,7 +2047,7 @@ def dsir_importance_weights(
     # and aggregates at the scan. Values identical: same rows, same
     # min.
     tgt = _L(spark, sf_dir, "documents").agg(F.min("source").alias("t"))
-    posts = pin_corpus_frame(_dsir_gram_buckets(d), mode=mode)
+    posts = pin_corpus_frame(_dsir_gram_buckets(d))
     counts = (
         posts.crossJoin(F.broadcast(tgt))
         .groupBy("b")

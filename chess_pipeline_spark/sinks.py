@@ -99,15 +99,10 @@ def compact_batch_ledger(
     if not os.path.exists(ledger_dir):
         return
     folded = commit.read_folded(ledger_dir)
+    ids = commit.batch_ids(ledger_dir, "batch_id")
+    if ids <= {0}:
+        return  # nothing beyond the base (or already folded): no-op
     cur = spark.read.parquet(ledger_dir)
-    ids = {
-        int(r["batch_id"])
-        for r in cur.select("batch_id").distinct().collect()
-    }
-    if ids <= {0} and not folded:
-        return  # nothing ever ingested beyond a fresh base: no-op
-    if ids == {0} and folded:
-        return  # already folded; replayed compaction is a no-op
     # Record a content digest per NOT-yet-folded batch before the fold
     # destroys its partition: the folded-id ingest guard uses these to
     # recognize the one legitimate replay shape (batch committed to
@@ -541,53 +536,3 @@ def repair_partitions(
         else:
             shutil.rmtree(level, ignore_errors=True)
     return bad_keys
-
-
-def check_or_stamp_format(dir_path: str, format_str: str, what: str) -> None:
-    """Identity stamp for a persisted index directory — the simhash
-    band index's `_format.json` discipline (r11 ADVICE), generalized
-    in r12 to every on-disk index whose bytes only mean something
-    under the code geometry that wrote them (PQ subspace/codebook
-    shape, BM25 tokenizer/bucket-hash). A probe or ingest against an
-    index written under a different geometry would return silently
-    wrong results with no error; instead: a fresh directory is
-    stamped, a stamped mismatch refuses with a rebuild message, and a
-    pre-existing unstamped directory refuses as unverifiable.
-    Underscore-prefixed, so parquet readers never see it; directory
-    swaps carry it (commit.replace_dir)."""
-    if not require_format(dir_path, format_str, what):
-        stamp_format(dir_path, format_str)
-
-
-def stamp_format(dir_path: str, format_str: str) -> None:
-    """Unconditional (re)stamp — the BUILD path, whose intent is a
-    rebuild: overwriting an old-format index with a fresh one is the
-    documented remedy, so the stamp follows the bytes."""
-    os.makedirs(dir_path, exist_ok=True)
-    commit.write_json(os.path.join(dir_path, "_format.json"), {"format": format_str})
-
-
-def require_format(dir_path: str, format_str: str, what: str) -> bool:
-    """PROBE-path check: a stamped mismatch or an unstamped directory
-    WITH data refuses; a missing/empty directory defers to the
-    reader's own error (probing a nonexistent index should fail as
-    exactly that, not as a stamping complaint). Returns whether the
-    directory carries a (matching) stamp."""
-    stamp = commit.read_json(os.path.join(dir_path, "_format.json"))
-    if stamp is not None:
-        stored = stamp.get("format")
-        if stored != format_str:
-            raise ValueError(
-                f"{what} at {dir_path} was written with format "
-                f"{stored!r} but this build expects {format_str!r} — "
-                "rebuild the index"
-            )
-        return True
-    if os.path.isdir(dir_path) and any(
-        not n.startswith("_") for n in os.listdir(dir_path)
-    ):
-        raise ValueError(
-            f"{what} at {dir_path} predates format stamping and cannot "
-            f"be verified against {format_str!r} — rebuild the index"
-        )
-    return False

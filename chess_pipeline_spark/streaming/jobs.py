@@ -19,7 +19,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from chess_pipeline_spark import commit
+from chess_pipeline_spark import commit, sinks
+from chess_pipeline_spark.functions.rounding import grid_cents
 from chess_pipeline_spark.sources.tables import _normalize_events, ensure_session_confs
 
 
@@ -354,52 +355,28 @@ def stream_ingest_dedup(docs: DataFrame, index_path: str, verdicts_path: str):
         simhash_signatures_for,
     )
 
-    def _check_or_stamp_format(index_exists: bool) -> None:
-        # r11 ADVICE: the 28→56-bit signature widening changed the
-        # meaning of the persisted simhash/bv columns. An old-format
-        # index would band-join against new-format values and return
-        # false 'not a dup' verdicts with NO error — so the index
-        # carries a _format.json sidecar (underscore-prefixed files
-        # are invisible to parquet readers, the _folded_batches.json
-        # pattern) and a mismatch, or a pre-existing index with no
-        # stamp at all, refuses loudly instead.
-        import os
-
-        stamp_path = os.path.join(index_path, "_format.json")
-        stamp = commit.read_json(stamp_path)
-        if stamp is not None:
-            stored = stamp.get("signature_format")
-            if stored != SIMHASH_FORMAT:
-                raise ValueError(
-                    f"simhash index at {index_path} was written with "
-                    f"signature format {stored!r} but this build "
-                    f"produces {SIMHASH_FORMAT!r} — rebuild the index "
-                    "(delete the directory and replay the stream)"
-                )
-        elif index_exists:
-            raise ValueError(
-                f"simhash index at {index_path} predates format "
-                f"stamping and cannot be verified against "
-                f"{SIMHASH_FORMAT!r} — rebuild the index (delete the "
-                "directory and replay the stream)"
-            )
-        else:
-            os.makedirs(index_path, exist_ok=True)
-            commit.write_json(stamp_path, {"signature_format": SIMHASH_FORMAT})
-
     def _process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         sig = simhash_signatures_for(
             batch.select("doc_id", "source", "text")
         ).persist()
         bands = simhash_bands_for(sig)
+        # r11 ADVICE: the 28→56-bit signature widening changed the
+        # meaning of the persisted simhash/bv columns; an old-format
+        # index would band-join against new-format values and return
+        # false 'not a dup' verdicts with no error, so a mismatched
+        # or unstamped index refuses instead
+        commit.check_stamp(
+            index_path,
+            SIMHASH_FORMAT,
+            "simhash index",
+            key="signature_format",
+            fresh=True,
+        )
         try:
             idx = spark.read.parquet(index_path)
-            index_exists = True
         except AnalysisException:
             idx = spark.createDataFrame([], bands.schema)
-            index_exists = False
-        _check_or_stamp_format(index_exists)
         cache = idx.select(
             F.col("source").alias("c_source"),
             F.col("band").alias("c_band"),
@@ -486,7 +463,7 @@ def _paragraph_process_batch(
     # the read recovers a crashed compaction's swap BEFORE the append
     # below (r10): appending to a fresh live dir while the digest set
     # sits in .bak would fork the state
-    ledger = _read_bounded_ledger(
+    ledger = sinks.read_bounded_ledger(
         spark, ledger_path, "digest string"
     ).select("digest", F.lit(True).alias("in_ledger"))
     win = Window.partitionBy("digest").orderBy("doc_id", "chunk_idx")
@@ -692,13 +669,6 @@ def stream_hll_distinct(events: DataFrame, registers_path: str, estimates_path: 
     return events.writeStream.foreachBatch(_process)
 
 
-# bounded-ledger helpers live in sinks.py; aliased here for the jobs
-# that predate the move
-from chess_pipeline_spark.functions.rounding import grid_cents
-from chess_pipeline_spark.sinks import bak_swap_write as _bak_swap_write
-from chess_pipeline_spark.sinks import read_bounded_ledger as _read_bounded_ledger
-
-
 def _hll_process_batch(
     batch: DataFrame, batch_id: int, registers_path: str, estimates_path: str
 ) -> None:
@@ -716,7 +686,7 @@ def _hll_process_batch(
             "event_type", F.md5(F.col("user_id").cast("string")).alias("h")
         )
     )
-    prior = _read_bounded_ledger(
+    prior = sinks.read_bounded_ledger(
         spark, registers_path, "event_type string, reg int, m_j int"
     )
     merged = (
@@ -728,7 +698,7 @@ def _hll_process_batch(
     # rewrite — reading and overwriting the same parquet path in
     # one lazy plan is not safe, and a KB-scale driver hop is the
     # honest cost model at every scale.
-    snap = _bak_swap_write(spark, merged, registers_path)
+    snap = sinks.bak_swap_write(spark, merged, registers_path)
     est = (
         snap.groupBy("event_type")
         .agg(
@@ -984,13 +954,13 @@ def _bloom_process_batch(
     regs = bloom_bitmap(
         batch.select(F.col("user_id").cast("string").alias("k")).distinct()
     )
-    prior = _read_bounded_ledger(spark, registers_path, "word long, bits long")
+    prior = sinks.read_bounded_ledger(spark, registers_path, "word long, bits long")
     merged = (
         regs.unionByName(prior.select("word", "bits"))
         .groupBy("word")
         .agg(F.bit_or("bits").alias("bits"))
     )
-    snap = _bak_swap_write(spark, merged, registers_path)
+    snap = sinks.bak_swap_write(spark, merged, registers_path)
     summary = snap.agg(
         F.sum(F.expr("bit_count(bits)")).cast("long").alias("bits_set"),
         F.count("*").cast("long").alias("words_used"),
@@ -1089,7 +1059,7 @@ def _es_sample_process_batch(
 
     spark = batch.sparkSession
     scored = es_scored(batch)
-    prior = _read_bounded_ledger(
+    prior = sinks.read_bounded_ledger(
         spark,
         sample_path,
         "doc_id long, source string, weight long, priority_micro long",
@@ -1100,7 +1070,7 @@ def _es_sample_process_batch(
     # top_k(A ∪ B) algebra (rows for the same doc are identical, so
     # exact dedup suffices)
     merged = es_top_k(scored.unionByName(prior).distinct())
-    snap = _bak_swap_write(spark, merged, sample_path)
+    snap = sinks.bak_swap_write(spark, merged, sample_path)
     summary = snap.agg(
         F.count("*").cast("long").alias("sample_size"),
         F.min("priority_micro").alias("cut_priority_micro"),
@@ -1146,13 +1116,13 @@ def _neg_reps_process_batch(
 
     spark = batch.sparkSession
     scored = neg_scored(batch.select("doc_id"))
-    prior = _read_bounded_ledger(
+    prior = sinks.read_bounded_ledger(
         spark, reps_path, "doc_id long, bucket int, tb int"
     )
     # SET union (replay re-contributes identical rows; duplicates
     # inside a bucket would otherwise occupy both rep slots)
     merged = neg_rep_rows(scored.unionByName(prior).distinct())
-    snap = _bak_swap_write(spark, merged, reps_path)
+    snap = sinks.bak_swap_write(spark, merged, reps_path)
     summary = snap.agg(
         F.count("*").cast("long").alias("n_reps"),
         F.countDistinct("bucket").cast("long").alias("n_buckets"),
@@ -1202,7 +1172,7 @@ def _split_ledger_process_batch(
 
     spark = batch.sparkSession
     scored = batch.select("doc_id", F.md5("text").alias("dg"))
-    prior = _read_bounded_ledger(
+    prior = sinks.read_bounded_ledger(
         spark, ledger_path, "dg string, group_rep long, split string"
     )
     fresh = (
@@ -1440,28 +1410,6 @@ def dup_exposure_from_ledger(
 # ------------------------------------------------------------------
 
 
-def _dsir_check_or_stamp_target(ledger_dir: str, target_source: str) -> None:
-    """Pin the ledger's target domain in a `_target.json` sidecar
-    (the simhash `_format.json` pattern): DSIR's p-model is defined
-    by WHICH source is the target, so counts ingested under one
-    target silently mean something different under another. A fresh
-    ledger is stamped; a mismatch refuses with a rebuild message."""
-    import os
-
-    stamp = os.path.join(ledger_dir, "_target.json")
-    stored = commit.read_json(stamp)
-    if stored is None:
-        os.makedirs(ledger_dir, exist_ok=True)
-        commit.write_json(stamp, {"target_source": target_source})
-    elif stored.get("target_source") != target_source:
-        raise ValueError(
-            f"DSIR ledger at {ledger_dir} was ingested with target "
-            f"{stored.get('target_source')!r} but this ingest/serve uses "
-            f"{target_source!r} — rebuild the ledger (delete the "
-            "directory and replay the stream)"
-        )
-
-
 def ingest_dsir_delta(
     batch: DataFrame, ledger_dir: str, batch_id: int, target_source: str
 ) -> None:
@@ -1480,11 +1428,20 @@ def ingest_dsir_delta(
     from chess_pipeline_spark.plans.corpus import _dsir_gram_buckets
     from chess_pipeline_spark.sinks import upsert_partition_overwrite
 
-    # recover BEFORE stamping (r12 ADVICE): the stamp helper creates
-    # the live directory for a fresh ledger, which would shadow a
-    # crashed compaction's .bak and fork the ledger
+    # recover BEFORE stamping (r12 ADVICE): stamping creates the live
+    # directory for a fresh ledger, which would shadow a crashed
+    # compaction's .bak and fork the ledger. DSIR's p-model is defined
+    # by WHICH source is the target, so counts ingested under one
+    # target mean something else under another: the ledger pins it.
     commit.recover(ledger_dir)
-    _dsir_check_or_stamp_target(ledger_dir, target_source)
+    commit.check_stamp(
+        ledger_dir,
+        target_source,
+        "DSIR ledger",
+        sidecar=commit.TARGET,
+        key="target_source",
+        fresh=True,
+    )
     delta = (
         _dsir_gram_buckets(batch.select("doc_id", "source", "text"))
         .groupBy("b")
@@ -1549,7 +1506,7 @@ def dsir_from_ledger(spark, ledger_dir: str, docs: DataFrame) -> DataFrame:
     # the ledger and its _target.json are read wherever a crashed
     # compaction left them (commit.readable)
     ledger_dir = commit.readable(ledger_dir)
-    target_source = commit.read_json(os.path.join(ledger_dir, "_target.json"))[
+    target_source = commit.read_json(os.path.join(ledger_dir, commit.TARGET))[
         "target_source"
     ]
 

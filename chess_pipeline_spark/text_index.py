@@ -173,9 +173,7 @@ def build_text_index(docs: DataFrame, index_path: str) -> None:
     import shutil
 
     shutil.rmtree(index_path, ignore_errors=True)
-    from chess_pipeline_spark.sinks import stamp_format
-
-    stamp_format(index_path, _TI_FORMAT)
+    commit.stamp(index_path, _TI_FORMAT)
     ingest_text_delta(docs, index_path, batch_id=0)
     postings_p, _, _ = _paths(index_path)
     commit.write_json(os.path.join(postings_p, commit.FOLDED), [0])
@@ -196,13 +194,11 @@ def ingest_text_delta(
     (commit.guard_ingest) — a dynamic overwrite of a folded partition
     would REPLACE merged base rows, the same silent-loss hazard the
     IVF sibling guards (ann_index.ingest_ivf_batch)."""
-    from chess_pipeline_spark.sinks import check_or_stamp_format
-
     # ingest semantics: a stream may legitimately build the index
     # from scratch, so a fresh/empty directory gets stamped on first
     # contact; a stamped mismatch or an unstamped PRE-EXISTING index
-    # refuses (check_or_stamp_format docstring)
-    check_or_stamp_format(index_path, _TI_FORMAT, "BM25 text index")
+    # refuses
+    commit.check_stamp(index_path, _TI_FORMAT, "BM25 text index", fresh=True)
 
     postings_p, doclens_p, stats_p = _paths(index_path)
     for p in (doclens_p, stats_p):
@@ -227,20 +223,15 @@ def ingest_text_delta(
     # parquet read) instead of the lazy `lens` plan, whose lineage
     # would re-run the full document tokenize a third time per
     # ingest. Same rows by construction — the partition holds exactly
-    # this batch's lens output. An EMPTY delta writes no partitions
-    # (and on a fresh index no readable table at all), so only then
-    # fall back to aggregating the lens plan directly — its n_docs=0
-    # stats row must still land (compact_text_index's consistency
-    # guard counts on it).
-    has_lens = os.path.isdir(doclens_p) and any(
-        e.is_dir() and e.name.startswith("batch_id=")
-        for e in os.scandir(doclens_p)
-    )
+    # this batch's lens output. An EMPTY delta writes no partition,
+    # so only then fall back to aggregating the lens plan directly —
+    # its n_docs=0 stats row must still land (compact_text_index's
+    # consistency guard counts on it).
     stats_src = (
         delta_docs.sparkSession.read.parquet(doclens_p).filter(
             F.col("batch_id") == batch_id
         )
-        if has_lens
+        if batch_id in commit.batch_ids(doclens_p, "batch_id")
         else lens
     )
     delta_stats = stats_src.agg(
@@ -287,28 +278,10 @@ def compact_text_index(
     postings_p, doclens_p, stats_p = _paths(index_path)
     for p in (postings_p, doclens_p, stats_p):
         commit.recover(p)
-        _sweep_empty_batch_dirs(p)
     if not os.path.exists(postings_p):
         return
-
-    def batch_ids(path: str) -> set[int]:
-        # r13: batch ids are the batch_id=N partition DIRECTORY names
-        # (every table here is batch_id-partitioned; Spark's writers
-        # never leave an empty partition dir, and entry swept any
-        # emptied-by-a-crashed-move dirs above) — an os.scandir
-        # answers what a parquet read + distinct + collect paid a
-        # Spark job for, three times per compaction. LOCAL FILESYSTEM
-        # ONLY (r14 ADVICE), like the commit module.
-        return {
-            int(e.name.split("=", 1)[1])
-            for e in os.scandir(path)
-            if e.is_dir() and e.name.startswith("batch_id=")
-        }
-
     p_ids, d_ids, s_ids = (
-        batch_ids(postings_p),
-        batch_ids(doclens_p),
-        batch_ids(stats_p),
+        commit.batch_ids(p, "batch_id") for p in (postings_p, doclens_p, stats_p)
     )
     all_ids = p_ids | d_ids | s_ids
     # Cross-table batch consistency guard: ingest writes postings ->
@@ -334,7 +307,7 @@ def compact_text_index(
     in_flight = commit.read_folding(postings_p)
     if all_ids <= {0} and not in_flight and not rewrite:
         return  # nothing ingested beyond the base: a no-op
-    with commit.folding(postings_p, all_ids):
+    with commit.folding(postings_p, all_ids) as todo:
         if rewrite:
             # major: re-read each table as batch 0 and swap in one
             # AQE-sized write — consolidates the minor folds' file count
@@ -360,10 +333,12 @@ def compact_text_index(
                     .parquet(t),
                 )
         else:
-            # postings: batch_id=N/bucket=B files → batch_id=0/bucket=B
-            _move_batches_into_zero(postings_p, nested=True)
-            # doclens: batch_id=N files → batch_id=0
-            _move_batches_into_zero(doclens_p, nested=False)
+            # postings: batch_id=N/bucket=B/f → batch_id=0/bucket=B/bN-f;
+            # doclens: batch_id=N/f → batch_id=0/bN-f
+            for path in (postings_p, doclens_p):
+                commit.fold_batches(
+                    path, "batch_id", todo - {0}, os.path.join(path, "batch_id=0")
+                )
         # stats: the fold is a SUM — one tiny Spark job over ≤#batches
         # rows, swapped in whole (post-fold the table is a single
         # summed batch-0 row by construction)
@@ -384,56 +359,6 @@ def compact_text_index(
             )
 
 
-def _sweep_empty_batch_dirs(table_dir: str) -> None:
-    """Remove batch_id=N (and nested bucket=B) directories that hold
-    no data files — the residue of a move-based fold that crashed
-    after its last rename. Without the sweep, batch_ids() would keep
-    reporting the emptied batch and the cross-table consistency guard
-    could refuse a compaction over a ghost."""
-    if not os.path.isdir(table_dir):
-        return
-    for b in os.scandir(table_dir):
-        if not (b.is_dir() and b.name.startswith("batch_id=")):
-            continue
-        if int(b.name.split("=", 1)[1]) == 0:
-            continue
-        for sub in os.scandir(b.path):
-            if sub.is_dir() and not any(os.scandir(sub.path)):
-                os.rmdir(sub.path)
-        if not any(os.scandir(b.path)):
-            os.rmdir(b.path)
-
-
-def _move_batches_into_zero(table_dir: str, nested: bool) -> None:
-    """Move every batch_id=N>0 partition's data files into the
-    batch_id=0 layout (same bucket subdir when nested), prefixing
-    with bN- so names stay unique, then drop the emptied batch dirs.
-    commit.move_data_files — atomic per file, no Spark,
-    delta-proportional."""
-    zero = os.path.join(table_dir, "batch_id=0")
-    for b in sorted(os.scandir(table_dir), key=lambda e: e.name):
-        if not (b.is_dir() and b.name.startswith("batch_id=")):
-            continue
-        bid = int(b.name.split("=", 1)[1])
-        if bid == 0:
-            continue
-        if nested:
-            for bucket in sorted(os.scandir(b.path), key=lambda e: e.name):
-                if bucket.is_dir():
-                    commit.move_data_files(
-                        bucket.path,
-                        os.path.join(zero, bucket.name),
-                        f"b{bid}-",
-                    )
-        else:
-            commit.move_data_files(b.path, zero, f"b{bid}-")
-            continue  # move_data_files already dropped the dir
-        for leftover in os.scandir(b.path):
-            if leftover.is_file() and leftover.name.startswith(("_", ".")):
-                os.remove(leftover.path)
-        os.rmdir(b.path)
-
-
 def probe_bm25(
     spark: SparkSession,
     index_path: str,
@@ -444,9 +369,7 @@ def probe_bm25(
     postings scan -> query-time df/idf (tiny, broadcast) -> score ->
     top-k by (score desc, doc_id). Bit-identical to bm25_doc_search
     over the same corpus and terms (pytest contract)."""
-    from chess_pipeline_spark.sinks import require_format
-
-    require_format(index_path, _TI_FORMAT, "BM25 text index")
+    commit.check_stamp(index_path, _TI_FORMAT, "BM25 text index")
     postings_p, doclens_p, stats_p = map(commit.readable, _paths(index_path))
     import hashlib
 

@@ -66,16 +66,16 @@ def main() -> None:
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
 
-    # soak-sized heap (recorded): under the DEFAULT postings mode the
-    # law section holds the batch query's ~2 GB postings checkpoint
-    # WHILE 32 rollup hash-aggs run; the 8g test default hit
-    # AGGREGATE_OUT_OF_MEMORY at 500k docs in r12. r13 adds the knob:
-    # SPARK_GRAFT_DSIR_POSTINGS=disk|recompute is picked up by
-    # dsir_importance_weights directly, and this script records which
-    # mode ran at which heap — the disk-mode law run at
-    # SPARK_DRIVER_MEMORY=8g is the escape-hatch proof
+    # soak-sized heap (recorded): under the DEFAULT corpus-pin mode
+    # the law section holds the batch query's ~2 GB postings
+    # checkpoint WHILE 32 rollup hash-aggs run; the 8g test default hit
+    # AGGREGATE_OUT_OF_MEMORY at 500k docs in r12. The knob:
+    # SPARK_GRAFT_CORPUS_PINS=disk|recompute is picked up by
+    # dsir_importance_weights (checkpoints.pin_corpus_frame), and this
+    # script records which mode ran at which heap — the disk-mode law
+    # run at SPARK_DRIVER_MEMORY=8g is the escape-hatch proof
     # (DSIR_ARTIFACT_SUFFIX names the sibling artifact).
-    mode = os.environ.get("SPARK_GRAFT_DSIR_POSTINGS", "checkpoint")
+    mode = os.environ.get("SPARK_GRAFT_CORPUS_PINS", "checkpoint")
     os.environ.setdefault(
         "SPARK_DRIVER_MEMORY", "24g" if mode == "checkpoint" else "8g"
     )
@@ -87,7 +87,7 @@ def main() -> None:
         "corpus": sfx,
         "n_batches": n_batches,
         "heap": os.environ["SPARK_DRIVER_MEMORY"],
-        "postings_mode": mode,
+        "corpus_pins": mode,
         "loadavg_start": list(os.getloadavg()),
     }
     docs = spark.read.parquet(f"{sfx}/documents.parquet").select(

@@ -57,16 +57,14 @@ FLOOR_BYTES = 1 << 20  # 1 MiB at sf0.1
 # Queries whose corpus-scale pin is a DOCUMENTED, knob-equipped
 # trade-off (the audit refuses any corpus-scale pin not cited here).
 # All four route through checkpoints.pin_corpus_frame, so env
-# SPARK_GRAFT_CORPUS_PINS='disk'|'recompute' is the uniform escape
-# hatch (DSIR additionally takes a per-call `postings` parameter);
-# tests pin output equality across modes and SCALING.md r13 records
-# the measured A/B.
+# SPARK_GRAFT_CORPUS_PINS='disk'|'recompute' is the one escape
+# hatch; tests pin output equality across modes and SCALING.md r13
+# records the measured A/B.
 CORPUS_SCALE_PINS: dict[str, str] = {
     # one (doc_id, source, bucket) row per gram occurrence, pinned so
     # the tokenize stage runs once for both the model fit and the
     # scoring pass (53 MB at sf0.1, ~2 GB at 500k docs)
-    "dsir_importance_weights": "postings pin; pin_corpus_frame knob "
-    "+ postings= param (r13)",
+    "dsir_importance_weights": "postings pin; pin_corpus_frame knob (r13)",
     # the Gumbel-top-k selection composes the weights plan and
     # inherits its postings pin (same knob, same escape hatches)
     "dsir_resample_topk": "inherits the DSIR postings pin; same "

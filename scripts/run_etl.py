@@ -63,11 +63,13 @@ def _load_json_records(path: str) -> list[dict]:
 
 
 def run_games(args: argparse.Namespace, spark=None) -> int:
-    import pyspark.sql.functions as F
-
     from chess_pipeline_spark.parse import parse_pgn_dataframe
     from chess_pipeline_spark.pipeline import materialize, run_game_etl
-    from chess_pipeline_spark.schemas import POSITION_EVALS, RAW_JSON
+    from chess_pipeline_spark.schemas import (
+        POSITION_EVALS,
+        RAW_JSON,
+        normalize_to_schema,
+    )
     from chess_pipeline_spark.session import get_spark
     from chess_pipeline_spark.sources.rest import json_records_source
     from pyspark.errors import AnalysisException
@@ -80,13 +82,11 @@ def run_games(args: argparse.Namespace, spark=None) -> int:
     pgn = parse_pgn_dataframe(
         spark.createDataFrame([(g,) for g in games], "pgn string")
     )
-    js = json_records_source(spark, _load_json_records(args.json))
     # conform to the RAW_JSON contract: absent fields become NULL,
     # present ones cast to the declared types
-    for f in RAW_JSON.fields:
-        if f.name not in js.columns:
-            js = js.withColumn(f.name, F.lit(None).cast(f.dataType))
-    js = js.select([F.col(f.name).cast(f.dataType) for f in RAW_JSON.fields])
+    js = normalize_to_schema(
+        json_records_source(spark, _load_json_records(args.json)), RAW_JSON
+    )
 
     # probe the cache through Spark, not os.path: with an HDFS/S3
     # --out, a local-filesystem existence check would silently treat

@@ -330,15 +330,68 @@ def test_bm25_compaction_crash_points(spark, tmp_path, monkeypatch, rewrite):
     assert n == 8
 
 
+def test_empty_partition_dirs_are_not_batches(spark, tmp_path):
+    """A partition directory with no data file — what a move fold leaves
+    when it crashes after its last rename — is not a batch: the listing
+    skips it, compact_text_index does not refuse it as a partial batch
+    (it has no stats row), and IVF compaction and probes ignore it."""
+    from chess_pipeline_spark.ann_index import _read_lists, compact_ivf_index
+    from chess_pipeline_spark.text_index import (
+        build_text_index,
+        compact_text_index,
+        ingest_text_delta,
+    )
+
+    def ghost(*parts):
+        d = os.path.join(*parts)
+        os.makedirs(d)
+        open(os.path.join(d, ".part-0.parquet.crc"), "w").close()
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+
+    tix = str(tmp_path / "tix")
+    build_text_index(docs([(1, "pawn bishop"), (2, "pawn pawn")]), tix)
+    ingest_text_delta(docs([(3, "bishop"), (4, "pawn")]), tix, batch_id=1)
+    want = _bm25_content(spark, tix)
+    ghost(tix, "postings", "batch_id=5", "bucket=3")
+    ghost(tix, "doclens", "batch_id=5")
+    postings = os.path.join(tix, "postings")
+    assert commit.batch_ids(postings, "batch_id") == {0, 1}
+    compact_text_index(spark, tix)
+    assert commit.read_folded(postings) == {0, 1}
+    assert _bm25_content(spark, tix) == want
+
+    _ivf_template(spark, str(tmp_path / "tpl"))
+    ivf = str(tmp_path / "tpl" / "ivf")
+    delta, lists = os.path.join(ivf, "lists_delta"), os.path.join(ivf, "lists")
+
+    def read():
+        return _rows(_read_lists(spark, ivf).select("vec_id", "list_id"))
+
+    want = read()
+    ghost(delta, "list_id=1", "ingest_batch=9")
+    assert commit.batch_ids(delta, "ingest_batch") == {1}
+    assert read() == want
+    compact_ivf_index(spark, ivf)
+    assert commit.read_folded(lists) == {1}
+    assert read() == want
+    # a delta of nothing but an emptied partition
+    ghost(delta, "list_id=2", "ingest_batch=9")
+    assert read() == want
+    compact_ivf_index(spark, ivf)
+    assert commit.read_folded(lists) == {1}
+    assert read() == want
+
+
 def test_unreadable_folding_marker_refuses_ingest(spark, tmp_path):
     """A damaged `_folding_batches.json` (commit never writes one torn,
     so only outside damage makes it) must make ingest raise rather than
     read as 'nothing in flight' and disarm the mid-fold replay guard."""
     from chess_pipeline_spark.ann_index import _IVF_FORMAT, ingest_ivf_batch
-    from chess_pipeline_spark.sinks import stamp_format
 
     idx = str(tmp_path / "ivf")
-    stamp_format(idx, _IVF_FORMAT)
+    commit.stamp(idx, _IVF_FORMAT)
     os.makedirs(os.path.join(idx, "lists"))
     with open(os.path.join(idx, "lists", commit.FOLDING), "w") as fh:
         fh.write("[1, 2")
