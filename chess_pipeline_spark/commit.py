@@ -29,8 +29,11 @@ folded (`_folded_batches.json`).
   partition layout (`batch_id=N` or `ingest_batch=N` directories, at
   any depth): a batch is a partition directory that holds a data
   file, so a fold that crashed after its last move leaves no ghost
-  batch behind; a fold moves a batch's files, each prefixed `b{id}-`,
-  out of its partition directory and re-roots them under the target.
+  batch behind; like Spark's reader, the listing skips hidden
+  directories, so what a writer killed mid-job left under `_temporary`
+  or `.spark-staging-*` is never a batch; a fold moves a batch's
+  files, each prefixed `b{id}-`, out of its partition directory and
+  re-roots them under the target.
 * ``stamp`` / ``check_stamp`` — the one identity stamp (`_format.json`
   for index formats, `_target.json` for the DSIR target): a stamp
   naming another value refuses, unstamped data refuses, ingest stamps
@@ -149,13 +152,27 @@ def replace_dir(path: str, write, sidecars: dict | None = None) -> None:
     shutil.rmtree(bak, ignore_errors=True)
 
 
+def _hidden(name: str) -> bool:
+    """Underscore and dot names are not table content: stamps, markers,
+    `_SUCCESS`, Hadoop `.crc` checksums, and the `_temporary` and
+    `.spark-staging-*` directories a writer killed mid-job leaves.
+    Spark's partition discovery skips them; so does every listing here."""
+    return name.startswith(("_", "."))
+
+
+def _walk(top: str):
+    """os.walk of ``top`` that does not descend into hidden directories."""
+    for dirpath, dirs, files in os.walk(top):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        yield dirpath, dirs, files
+
+
 def _data_files(top: str):
     """(directory, name) of every data file under ``top`` — the files a
-    parquet reader lists; underscore and dot names (stamps, markers,
-    `_SUCCESS`, Hadoop `.crc` checksums) are not data."""
-    for dirpath, _dirs, files in os.walk(top):
+    parquet reader lists (no hidden name on the path below ``top``)."""
+    for dirpath, _dirs, files in _walk(top):
         for name in files:
-            if not name.startswith(("_", ".")):
+            if not _hidden(name):
                 yield dirpath, name
 
 
@@ -167,7 +184,7 @@ def has_data(top: str) -> bool:
 def _partitions(root: str, col: str):
     """(id, path) of every `col=id` partition directory under ``root``,
     at whatever depth the layout puts the batch column."""
-    for dirpath, dirs, _files in os.walk(root):
+    for dirpath, dirs, _files in _walk(root):
         for d in [d for d in dirs if d.startswith(col + "=")]:
             dirs.remove(d)
             yield int(d[len(col) + 1 :]), os.path.join(dirpath, d)
@@ -188,7 +205,7 @@ def move_data_files(src_dir: str, dest_dir: str, prefix: str) -> None:
     directories at any instant."""
     os.makedirs(dest_dir, exist_ok=True)
     for f in list(os.scandir(src_dir)):
-        if f.is_file() and not f.name.startswith(("_", ".")):
+        if f.is_file() and not _hidden(f.name):
             crc = os.path.join(src_dir, f".{f.name}.crc")
             if os.path.exists(crc):
                 _rename(crc, os.path.join(dest_dir, f".{prefix}{f.name}.crc"))

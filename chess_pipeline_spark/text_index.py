@@ -231,7 +231,7 @@ def ingest_text_delta(
         delta_docs.sparkSession.read.parquet(doclens_p).filter(
             F.col("batch_id") == batch_id
         )
-        if batch_id in commit.batch_ids(doclens_p, "batch_id")
+        if commit.has_data(os.path.join(doclens_p, f"batch_id={batch_id}"))
         else lens
     )
     delta_stats = stats_src.agg(

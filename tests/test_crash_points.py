@@ -334,8 +334,16 @@ def test_empty_partition_dirs_are_not_batches(spark, tmp_path):
     """A partition directory with no data file — what a move fold leaves
     when it crashes after its last rename — is not a batch: the listing
     skips it, compact_text_index does not refuse it as a partial batch
-    (it has no stats row), and IVF compaction and probes ignore it."""
+    (it has no stats row), and IVF compaction and probes ignore it.
+    Nor is a data file under a hidden directory (`.spark-staging-*`,
+    `_temporary`: a writer killed mid-job), which Spark's reader skips:
+    it is not listed, not folded, not moved and not marked, so the
+    replay that heals the crashed batch is accepted."""
     from chess_pipeline_spark.ann_index import _read_lists, compact_ivf_index
+    from chess_pipeline_spark.streaming.jobs import (
+        compact_dsir_ledger,
+        ingest_dsir_delta,
+    )
     from chess_pipeline_spark.text_index import (
         build_text_index,
         compact_text_index,
@@ -347,6 +355,13 @@ def test_empty_partition_dirs_are_not_batches(spark, tmp_path):
         os.makedirs(d)
         open(os.path.join(d, ".part-0.parquet.crc"), "w").close()
 
+    def staged(*parts):
+        d = os.path.join(*parts)
+        os.makedirs(d)
+        f = os.path.join(d, "part-0.parquet")
+        open(f, "w").close()
+        return f
+
     def docs(rows):
         return spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
 
@@ -356,11 +371,21 @@ def test_empty_partition_dirs_are_not_batches(spark, tmp_path):
     want = _bm25_content(spark, tix)
     ghost(tix, "postings", "batch_id=5", "bucket=3")
     ghost(tix, "doclens", "batch_id=5")
+    left = [
+        staged(tix, "postings", ".spark-staging-x", "batch_id=6", "bucket=3"),
+        staged(tix, "doclens", ".spark-staging-x", "batch_id=6"),
+        staged(tix, "doclens", "_temporary", "0", "batch_id=6"),
+    ]
     postings = os.path.join(tix, "postings")
     assert commit.batch_ids(postings, "batch_id") == {0, 1}
+    assert commit.batch_ids(os.path.join(tix, "doclens"), "batch_id") == {0, 1}
     compact_text_index(spark, tix)
     assert commit.read_folded(postings) == {0, 1}
     assert _bm25_content(spark, tix) == want
+    assert all(os.path.exists(f) for f in left)
+    ingest_text_delta(docs([(5, "rook")]), tix, batch_id=6)
+    compact_text_index(spark, tix)
+    assert commit.read_folded(postings) == {0, 1, 6}
 
     _ivf_template(spark, str(tmp_path / "tpl"))
     ivf = str(tmp_path / "tpl" / "ivf")
@@ -371,17 +396,37 @@ def test_empty_partition_dirs_are_not_batches(spark, tmp_path):
 
     want = read()
     ghost(delta, "list_id=1", "ingest_batch=9")
+    staged(delta, ".spark-staging-x", "list_id=1", "ingest_batch=8")
+    staged(delta, "_temporary", "0", "list_id=1", "ingest_batch=8")
     assert commit.batch_ids(delta, "ingest_batch") == {1}
     assert read() == want
     compact_ivf_index(spark, ivf)
+    # batch 8 is neither marked nor moved into the base (the fold drops
+    # the whole delta directory afterwards, leftovers included)
     assert commit.read_folded(lists) == {1}
     assert read() == want
+    assert not {".spark-staging-x", "_temporary"} & set(os.listdir(lists))
     # a delta of nothing but an emptied partition
     ghost(delta, "list_id=2", "ingest_batch=9")
     assert read() == want
     compact_ivf_index(spark, ivf)
     assert commit.read_folded(lists) == {1}
     assert read() == want
+
+    dsir = spark.createDataFrame(
+        [(1, "a_t", "alpha beta"), (2, "z_r", "beta gamma")],
+        "doc_id long, source string, text string",
+    )
+    led = str(tmp_path / "led")
+    ingest_dsir_delta(dsir, led, 0, "a_t")
+    ingest_dsir_delta(dsir, led, 1, "a_t")
+    staged(led, ".spark-staging-x", "batch_id=2")
+    assert commit.batch_ids(led, "batch_id") == {0, 1}
+    compact_dsir_ledger(spark, led)
+    assert commit.read_folded(led) == {0, 1}
+    assert "2" not in commit.read_json(os.path.join(led, commit.DIGESTS), {})
+    ingest_dsir_delta(dsir, led, 2, "a_t")
+    assert commit.batch_ids(led, "batch_id") == {0, 2}
 
 
 def test_unreadable_folding_marker_refuses_ingest(spark, tmp_path):
