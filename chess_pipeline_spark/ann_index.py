@@ -122,22 +122,28 @@ _PQ_K = 32
 _IVF_FORMAT = f"ivfadc-pq{_PQ_M}x{_PQ_K}-int8affine-grid1e9"
 
 
-def _pq_subdist(j: int, sub: int):
-    """Squared L2 between `embedding`'s and `c`'s j-th subvector,
-    grid-rounded at 1e-9 so argmin ties break identically anywhere.
-    Index-fold form (r12, same rewrite as _encode_rows' pq_j): zero
-    per-pair array allocation, identical left-to-right add order, so
-    distances and argmins are byte-identical to the zip_with form."""
+def _pq_subspace_l2(j: int, sub: int, c: str) -> str:
+    """SQL for the squared L2 between `embedding`'s and the centroid
+    expression ``c``'s j-th subvector (1-based positions j*sub+1 ..
+    (j+1)*sub), shared by the PQ encoder and the ADC probe."""
+    # index-fold form (r12): the original
+    # aggregate(zip_with(slice(embedding,...), slice(c,...)))
+    # allocated THREE arrays per (vector, centroid, subspace) —
+    # 768 allocations/row at 8x32 — and the r12 profile measured
+    # PQ encoding as 95% of ivf_build's 76 s at 500k vectors.
+    # sequence(lo, hi) over literals constant-folds to one shared
+    # array, so this fold does zero per-pair allocation; the
+    # left-to-right add order over identical doubles is unchanged,
+    # so codes stay byte-identical (numpy-parity + oracle tests).
     lo = j * sub + 1
-    d = F.expr(
+    return (
         f"aggregate(sequence({lo}, {lo + sub - 1}), "
         f"CAST(0 AS DOUBLE), "
         f"(a, i) -> a + (CAST(element_at(embedding, i) AS DOUBLE) "
-        f"- CAST(element_at(c, i) AS DOUBLE)) "
+        f"- CAST(element_at({c}, i) AS DOUBLE)) "
         f"* (CAST(element_at(embedding, i) AS DOUBLE) "
-        f"- CAST(element_at(c, i) AS DOUBLE)))"
+        f"- CAST(element_at({c}, i) AS DOUBLE)))"
     )
-    return F.floor(d * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
 
 
 def build_ivf_index(
@@ -374,24 +380,9 @@ def _encode_rows(
     )
 
     def pq_j(j: int) -> str:
-        lo = j * sub + 1
-        # index-fold form (r12): the original
-        # aggregate(zip_with(slice(embedding,...), slice(e.c,...)))
-        # allocated THREE arrays per (vector, centroid, subspace) —
-        # 768 allocations/row at 8x32 — and the r12 profile measured
-        # PQ encoding as 95% of ivf_build's 76 s at 500k vectors.
-        # sequence(lo, hi) over literals constant-folds to one shared
-        # array, so this fold does zero per-pair allocation; the
-        # left-to-right add order over identical doubles is unchanged,
-        # so codes stay byte-identical (numpy-parity + oracle tests).
-        d = (
-            f"aggregate(sequence({lo}, {lo + sub - 1}), "
-            f"CAST(0 AS DOUBLE), "
-            f"(a, i) -> a + (CAST(element_at(embedding, i) AS DOUBLE) "
-            f"- CAST(element_at(e.c, i) AS DOUBLE)) "
-            f"* (CAST(element_at(embedding, i) AS DOUBLE) "
-            f"- CAST(element_at(e.c, i) AS DOUBLE)))"
-        )
+        # distances grid-rounded at 1e-9 so argmin ties break
+        # identically anywhere
+        d = _pq_subspace_l2(j, sub, "e.c")
         return (
             f"CAST(array_min(transform(cbk, e -> named_struct("
             f"'d', floor(({d}) * 1000000000.0 + 0.5) / 1000000000.0, "
@@ -762,17 +753,8 @@ def probe_ivf_adc(
     )
 
     def _dm_row(j: int) -> str:
-        lo = j * sub + 1
-        d = (
-            f"aggregate(sequence({lo}, {lo + sub - 1}), "
-            f"CAST(0 AS DOUBLE), "
-            f"(a, i) -> a + (CAST(element_at(embedding, i) AS DOUBLE) "
-            f"- CAST(element_at(e.c, i) AS DOUBLE)) "
-            f"* (CAST(element_at(embedding, i) AS DOUBLE) "
-            f"- CAST(element_at(e.c, i) AS DOUBLE)))"
-        )
-        # identical micro-unit rounding to _pq_subdist * 1e6: grid the
-        # distance at 1e-9, then floor to integer micro-units
+        d = _pq_subspace_l2(j, sub, "e.c")
+        # the encoder's 1e-9 distance grid, then integer micro-units
         return (
             f"transform(cbk, e -> CAST(floor((floor(({d}) * 1000000000.0 "
             f"+ 0.5) / 1000000000.0) * 1000000.0 + 0.5) AS BIGINT))"

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -50,103 +51,121 @@ def upsert_partition_overwrite(
     )
 
 
-def ledger_content_digest(df: DataFrame, cols: list[str]) -> str:
-    """Order-independent content fingerprint of a ledger frame:
-    ``n_rows:sum(xxhash64(cols-as-strings) as decimal(38,0))``. Row
-    order and partitioning don't matter (sum is commutative over the
-    exact decimal domain); any changed/added/dropped row moves the
-    sum with probability ~1-2^-64. Deterministic only when the row
-    VALUES are — a ledger of float sums may legitimately differ
-    bitwise on recompute, in which case the replay guard degrades to
-    the raise (never to a silent skip)."""
+def _content_digest(cols: list[str]) -> list:
+    """The replay guard's content digest of a ledger frame, as the
+    aggregate pair (d, n) that renders as ``"n:d"``: the row count and
+    the sum of xxhash64(cols-as-strings) as decimal(38,0). Row order
+    and partitioning don't matter (the exact decimal sum commutes); any
+    changed, added or dropped row moves it with probability ~1-2^-64.
+    Deterministic only when the row VALUES are: a ledger of float sums
+    may differ bitwise on recompute, and the guard then degrades to its
+    raise, never to a silent skip."""
     h = F.xxhash64(*[F.col(c).cast("string") for c in sorted(cols)])
     zero = F.lit(0).cast("decimal(38,0)")
-    row = df.agg(
+    return [
         F.coalesce(F.sum(h.cast("decimal(38,0)")), zero).alias("d"),
         F.count("*").alias("n"),
-    ).first()
-    return f"{row['n']}:{row['d']}"
-
-
-def compact_batch_ledger(
-    spark,
-    ledger_dir: str,
-    group_cols: list[str],
-    sum_cols: list[str] = (),
-    max_cols: list[str] = (),
-) -> None:
-    """Fold a batch-partitioned ADDITIVE ledger into a single batch-0
-    partition, idempotently — the generic maintenance pass for the
-    streaming ledgers that land one `batch_id=N` partition per
-    micro-batch forever (the dup-gram df ledger, CMS counter cells,
-    …): probes stay correct (they aggregate across batches anyway)
-    but small files grow without bound under continuous ingest.
-
-    Fold semantics: groupBy(group_cols) with SUM over sum_cols and
-    MAX over max_cols — exactly the aggregation the ledger's probe
-    applies across batches, so any probe is bit-identical before and
-    after the fold. Only ledgers whose probe IS such a sum/max fold
-    may use this; per-batch SNAPSHOT series (where the batch history
-    is the point) must not.
-
-    The merged table replaces the ledger in one commit.replace_dir
-    swap that carries the `_folded_batches.json` marker, so ingest
-    paths refuse folded ids (commit.guard_ingest) from the instant the
-    fold lands — a replayed batch under a folded id would DOUBLE-COUNT
-    (ledger addition is not idempotent).
-    """
-    commit.recover(ledger_dir)
-    if not os.path.exists(ledger_dir):
-        return
-    folded = commit.read_folded(ledger_dir)
-    ids = commit.batch_ids(ledger_dir, "batch_id")
-    if ids <= {0}:
-        return  # nothing beyond the base (or already folded): no-op
-    cur = spark.read.parquet(ledger_dir)
-    # Record a content digest per NOT-yet-folded batch before the fold
-    # destroys its partition: the folded-id ingest guard uses these to
-    # recognize the one legitimate replay shape (batch committed to
-    # the ledger but not the stream checkpoint when compaction folded
-    # it — identical rows) and no-op instead of wedging the stream.
-    # `ids - folded` never re-digests a merged batch-0 (0 enters the
-    # marker at the first fold).
-    data_cols = sorted(c for c in cur.columns if c != "batch_id")
-    h = F.xxhash64(*[F.col(c).cast("string") for c in data_cols])
-    zero = F.lit(0).cast("decimal(38,0)")
-    digest_rows = (
-        cur.filter(F.col("batch_id").isin(sorted(ids - folded)))
-        .groupBy("batch_id")
-        .agg(
-            F.coalesce(F.sum(h.cast("decimal(38,0)")), zero).alias("d"),
-            F.count("*").alias("n"),
-        )
-        .collect()
-    )
-    digests = {
-        int(k): v
-        for k, v in commit.read_json(
-            os.path.join(ledger_dir, commit.DIGESTS), {}
-        ).items()
-    }
-    digests.update(
-        {int(r["batch_id"]): f"{r['n']}:{r['d']}" for r in digest_rows}
-    )
-    aggs = [F.sum(c).alias(c) for c in sum_cols] + [
-        F.max(c).alias(c) for c in max_cols
     ]
-    merged = (
-        cur.groupBy(*group_cols).agg(*aggs).withColumn("batch_id", F.lit(0))
-    )
-    commit.replace_dir(
-        ledger_dir,
-        lambda tmp: merged.write.partitionBy("batch_id")
-        .mode("overwrite")
-        .parquet(tmp),
-        sidecars={
-            commit.FOLDED: sorted(folded | ids),
-            commit.DIGESTS: {str(k): v for k, v in sorted(digests.items())},
-        },
-    )
+
+
+@dataclass(frozen=True)
+class AdditiveLedger:
+    """A batch-partitioned ADDITIVE ledger: each micro-batch lands its
+    rows in its own `batch_id=N` partition by dynamic partition
+    overwrite (so an at-least-once replay rewrites identical bytes),
+    and the ledger's value is the fold groupBy(keys) with a sum of each
+    column in ``sums`` across batches. That one fold is the probes'
+    read and the compaction's merge, so every probe reads the same
+    before and after a compaction.
+
+    Addition is not idempotent, so a compaction marks the ids it folds
+    (`_folded_batches.json`) and records a content digest per batch
+    (`_folded_digests.json`); ``guard`` refuses a folded id unless the
+    replayed rows match its digest."""
+
+    keys: tuple[str, ...]
+    sums: tuple[str, ...]
+
+    def fold(self, df: DataFrame) -> DataFrame:
+        return df.groupBy(*self.keys).agg(*[F.sum(c).alias(c) for c in self.sums])
+
+    def read(self, spark, ledger_dir: str, skip_batch: int | None = None) -> DataFrame:
+        """The folded ledger, read wherever a crashed compaction left it
+        (commit.readable); ``skip_batch`` leaves that batch's partition out."""
+        df = spark.read.parquet(commit.readable(ledger_dir))
+        if skip_batch is not None:
+            df = df.filter(F.col("batch_id") != skip_batch)
+        return self.fold(df)
+
+    def guard(self, ledger_dir: str, batch_id: int, job: str, delta: DataFrame) -> bool:
+        """commit.guard_ingest with this ledger's replay digest: True
+        (skip the write) for the at-least-once replay of a folded batch
+        whose ``delta`` rows (batch_id column ignored) are identical to
+        the folded ones; any other folded or mid-fold id raises."""
+        cols = [c for c in delta.columns if c != "batch_id"]
+
+        def digest() -> str:
+            row = delta.agg(*_content_digest(cols)).first()
+            return f"{row['n']}:{row['d']}"
+
+        return commit.guard_ingest(ledger_dir, batch_id, job, digest)
+
+    def ingest(
+        self, delta: DataFrame, ledger_dir: str, batch_id: int, job: str
+    ) -> None:
+        """Guard, then write ``delta`` as its batch's partition."""
+        if not self.guard(ledger_dir, batch_id, job, delta):
+            upsert_partition_overwrite(delta, ledger_dir, ["batch_id"])
+
+    def compact(self, spark, ledger_dir: str) -> None:
+        """Fold every batch partition into one batch-0 partition,
+        idempotently: under continuous ingest the partitions otherwise
+        grow small files without bound. The merged table replaces the
+        ledger in one commit.replace_dir swap that carries the folded
+        marker and the digests, so ingest refuses folded ids from the
+        instant the fold lands. PRECONDITION: quiesce the feeding
+        stream first."""
+        commit.recover(ledger_dir)
+        if not os.path.exists(ledger_dir):
+            return
+        folded = commit.read_folded(ledger_dir)
+        ids = commit.batch_ids(ledger_dir, "batch_id")
+        if ids <= {0}:
+            return  # nothing beyond the base (or already folded): no-op
+        cur = spark.read.parquet(ledger_dir)
+        # Digest each NOT-yet-folded batch before the fold destroys its
+        # partition: the guard uses these to recognize the one
+        # legitimate replay shape (batch committed to the ledger but not
+        # the stream checkpoint when compaction folded it — identical
+        # rows) and no-op instead of wedging the stream. `ids - folded`
+        # never re-digests a merged batch 0 (0 enters the marker at the
+        # first fold).
+        digest_rows = (
+            cur.filter(F.col("batch_id").isin(sorted(ids - folded)))
+            .groupBy("batch_id")
+            .agg(*_content_digest([c for c in cur.columns if c != "batch_id"]))
+            .collect()
+        )
+        digests = {
+            int(k): v
+            for k, v in commit.read_json(
+                os.path.join(ledger_dir, commit.DIGESTS), {}
+            ).items()
+        }
+        digests.update(
+            {int(r["batch_id"]): f"{r['n']}:{r['d']}" for r in digest_rows}
+        )
+        merged = self.fold(cur).withColumn("batch_id", F.lit(0))
+        commit.replace_dir(
+            ledger_dir,
+            lambda tmp: merged.write.partitionBy("batch_id")
+            .mode("overwrite")
+            .parquet(tmp),
+            sidecars={
+                commit.FOLDED: sorted(folded | ids),
+                commit.DIGESTS: {str(k): v for k, v in sorted(digests.items())},
+            },
+        )
 
 
 def upsert_parquet(df: DataFrame, path: str, keys: list[str]) -> None:
@@ -351,7 +370,7 @@ def bak_swap_write(spark, merged: DataFrame, registers_path: str) -> DataFrame:
 def compact_append_ledger(spark, ledger_dir: str, fold) -> None:
     """Fold an APPEND-ONLY ledger (each micro-batch appends rows; no
     batch_id partitioning) into one compact rewrite — the set-union
-    sibling of compact_batch_ledger, for the ledgers whose fold is
+    sibling of AdditiveLedger.compact, for the ledgers whose fold is
     IDEMPOTENT (digest-set distinct, count sum-merge at the reader's
     own grain): no `_folded_batches.json` marker or folded-id guard
     is needed, because an at-least-once replay after the fold

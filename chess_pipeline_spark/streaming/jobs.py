@@ -23,6 +23,19 @@ from chess_pipeline_spark import commit, sinks
 from chess_pipeline_spark.functions.rounding import grid_cents
 from chess_pipeline_spark.sources.tables import _normalize_events, ensure_session_confs
 
+# The additive batch-partitioned ledgers, keyed by their
+# `ann_index_cli compact --kind` names: each one's fold (group keys,
+# summed columns) is its probes' read and its compaction's merge.
+ADDITIVE_LEDGERS = {
+    "dupgram": sinks.AdditiveLedger(("gd",), ("df",)),
+    "spangram": sinks.AdditiveLedger(("gd",), ("cnt",)),
+    "dsir": sinks.AdditiveLedger(("b",), ("cp", "cq")),
+    "cms": sinks.AdditiveLedger(("row_i", "bucket"), ("cnt",)),
+    "histogram": sinks.AdditiveLedger(("event_type", "bin"), ("cnt",)),
+    "pca-gram": sinks.AdditiveLedger(("idx",), ("val",)),
+    "boiler": sinks.AdditiveLedger(("digest",), ("inc",)),
+}
+
 
 def _events_physical_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     """File-source streams require an explicit schema; probe it from a
@@ -516,10 +529,9 @@ def stream_boilerplate_removal(docs: DataFrame, ledger_path: str, verdicts_path:
 
     100 TB shape: the ledger carries 32-byte digests + a count; each
     batch writes only its own partition (no rewrite of history) and
-    compact_boilerplate_ledger folds the partitions at maintenance
-    cadence (the additive compact_batch_ledger discipline, folded-id
-    + content-digest guarded); the boilerplate set for a batch stays
-    broadcast-sized.
+    ADDITIVE_LEDGERS["boiler"].compact folds the partitions at
+    maintenance cadence (folded-id + content-digest guarded); the
+    boilerplate set for a batch stays broadcast-sized.
     """
     def _process(batch: DataFrame, batch_id: int) -> None:
         _boiler_process_batch(batch, batch_id, ledger_path, verdicts_path)
@@ -565,8 +577,9 @@ def _boiler_process_batch(
     # read below never sees a half-swapped empty ledger); skip==True
     # is the identical-content post-compaction replay — verdicts
     # still rewrite their partition, the ledger write is elided
-    skip_ledger = _refuse_folded_batch_id(
-        ledger_path, batch_id, "stream_boilerplate_removal", frame=batch_counts
+    ledger = ADDITIVE_LEDGERS["boiler"]
+    skip_ledger = ledger.guard(
+        ledger_path, batch_id, "stream_boilerplate_removal", batch_counts
     )
     # exclude this batch's OWN partition from the prior read: on a
     # pre-fold replay the partition already holds this batch's
@@ -577,10 +590,9 @@ def _boiler_process_batch(
     # MORE boilerplate — the conservative direction under the
     # documented as-of semantics.)
     prior = (
-        spark.read.parquet(ledger_path)
-        .filter(F.col("batch_id") != batch_id)
-        .groupBy("digest")
-        .agg(F.sum("inc").alias("prior"))
+        ledger.read(spark, ledger_path, skip_batch=batch_id).withColumnRenamed(
+            "inc", "prior"
+        )
         if os.path.exists(ledger_path)
         else spark.createDataFrame([], "digest string, prior long")
     )
@@ -620,22 +632,6 @@ def compact_paragraph_ledger(spark, ledger_path: str) -> None:
     compact_append_ledger(
         spark, ledger_path, lambda df: df.select("digest").distinct()
     )
-
-
-def compact_boilerplate_ledger(spark, ledger_path: str) -> None:
-    """Fold the boilerplate chunk-count ledger's per-batch partitions
-    into one batch-0 partition (sinks.compact_batch_ledger; fold =
-    the reader's own groupBy(digest).sum(inc), so the prior-count
-    probe is identical before and after). The ledger is
-    batch_id-partitioned (r10 — count addition is NOT idempotent, so
-    exactly-once comes from the layout, the CMS discipline), which
-    means this is the ADDITIVE fold: the folded-id marker + content
-    digests guard post-fold replays. Bounds the ledger at
-    distinct-chunk scale under continuous ingest. PRECONDITION:
-    quiesce the stream first."""
-    from chess_pipeline_spark.sinks import compact_batch_ledger
-
-    compact_batch_ledger(spark, ledger_path, ["digest"], sum_cols=["inc"])
 
 
 def stream_hll_distinct(events: DataFrame, registers_path: str, estimates_path: str):
@@ -757,15 +753,9 @@ def _cms_process_batch(
     counters = cms_sketch_counters(words).withColumn(
         "batch_id", F.lit(batch_id)
     )
-    if not _refuse_folded_batch_id(
-        ledger_path, batch_id, "stream_cms_sketch", frame=counters
-    ):
-        upsert_partition_overwrite(counters, ledger_path, ["batch_id"])
-    merged = (
-        spark.read.parquet(ledger_path)
-        .groupBy("row_i", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    ledger = ADDITIVE_LEDGERS["cms"]
+    ledger.ingest(counters, ledger_path, batch_id, "stream_cms_sketch")
+    merged = ledger.read(spark, ledger_path)
     snap = merged.agg(
         F.count("*").cast("long").alias("buckets_used"),
         F.sum("cnt").cast("long").alias("total_count"),
@@ -776,17 +766,6 @@ def _cms_process_batch(
     # instead of appending a duplicate (r6 advice — plain append
     # made only the ledger exactly-once, not the snapshot)
     upsert_partition_overwrite(snap, snapshot_path, ["batch_id"])
-
-
-def compact_cms_ledger(spark, ledger_path: str) -> None:
-    """Fold the per-batch Count-Min counter partitions into one
-    batch-0 grid (sinks.compact_batch_ledger; fold = the probe's own
-    groupBy(row_i, bucket) sum(cnt), so merged counters are identical
-    before and after). Bounds the ledger at grid scale (<= 4x1024
-    rows) under continuous ingest."""
-    from chess_pipeline_spark.sinks import compact_batch_ledger
-
-    compact_batch_ledger(spark, ledger_path, ["row_i", "bucket"], sum_cols=["cnt"])
 
 
 def stream_value_histogram(events: DataFrame, ledger_path: str, quantiles_path: str):
@@ -834,18 +813,12 @@ def _value_hist_process_batch(
         .agg(F.count("*").alias("cnt"))
         .withColumn("batch_id", F.lit(batch_id))
     )
-    if not _refuse_folded_batch_id(
-        ledger_path, batch_id, "stream_value_histogram", frame=hist
-    ):
-        upsert_partition_overwrite(hist, ledger_path, ["batch_id"])
+    ledger = ADDITIVE_LEDGERS["histogram"]
+    ledger.ingest(hist, ledger_path, batch_id, "stream_value_histogram")
 
     from pyspark.sql import Window
 
-    merged = (
-        spark.read.parquet(ledger_path)
-        .groupBy("event_type", "bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    merged = ledger.read(spark, ledger_path)
     wcum = (
         Window.partitionBy("event_type")
         .orderBy("bin")
@@ -872,48 +845,6 @@ def _value_hist_process_batch(
     # batch_id-keyed overwrite: replayed batches rewrite their own
     # snapshot partition rather than appending duplicates
     upsert_partition_overwrite(snap, quantiles_path, ["batch_id"])
-
-
-def compact_histogram_ledger(spark, ledger_path: str) -> None:
-    """Fold the per-batch (event_type, bin) count partitions into one
-    batch-0 partition (sinks.compact_batch_ledger; fold = the probe's
-    own groupBy(event_type, bin) sum(cnt)) — bounds the ledger at
-    <= 1000·|types| rows under continuous ingest."""
-    from chess_pipeline_spark.sinks import compact_batch_ledger
-
-    compact_batch_ledger(
-        spark, ledger_path, ["event_type", "bin"], sum_cols=["cnt"]
-    )
-
-
-def compact_pca_gram_ledger(spark, ledger_path: str) -> None:
-    """Fold the per-batch PCA Gram cell partitions into one batch-0
-    partition (sinks.compact_batch_ledger; fold = the probe's own
-    groupBy(idx) sum(val)) — bounds the ledger at d²+d+1 rows."""
-    from chess_pipeline_spark.sinks import compact_batch_ledger
-
-    compact_batch_ledger(spark, ledger_path, ["idx"], sum_cols=["val"])
-
-
-def _refuse_folded_batch_id(
-    ledger_path: str, batch_id: int, job: str, frame: DataFrame | None = None
-) -> bool:
-    """commit.guard_ingest for the additive batch-partition ledgers,
-    whose compaction records a content digest per folded batch: True
-    (skip the write) for the legitimate at-least-once replay of a
-    folded batch with IDENTICAL rows — ``frame``, batch_id column
-    ignored. Any other folded id raises, since ledger addition is not
-    idempotent and a reused id would double-count. Ledgers whose
-    recomputed rows aren't bit-deterministic (float sums) may fail the
-    digest compare on a legitimate replay; that degrades to the raise,
-    never to a silent double-count."""
-    from chess_pipeline_spark.sinks import ledger_content_digest
-
-    digest = None
-    if frame is not None:
-        cols = [c for c in frame.columns if c != "batch_id"]
-        digest = lambda: ledger_content_digest(frame, cols)  # noqa: E731
-    return commit.guard_ingest(ledger_path, batch_id, job, digest)
 
 
 def stream_bloom_filter(events: DataFrame, registers_path: str, snapshot_path: str):
@@ -1006,14 +937,9 @@ def _pca_gram_process_batch(
     from chess_pipeline_spark.sinks import upsert_partition_overwrite
 
     cells = pca_cells(batch).withColumn("batch_id", F.lit(batch_id))
-    if not _refuse_folded_batch_id(
-        ledger_path, batch_id, "stream_pca_gram", frame=cells
-    ):
-        upsert_partition_overwrite(cells, ledger_path, ["batch_id"])
-    spark = batch.sparkSession
-    merged = (
-        spark.read.parquet(ledger_path).groupBy("idx").agg(F.sum("val").alias("val"))
-    )
+    ledger = ADDITIVE_LEDGERS["pca-gram"]
+    ledger.ingest(cells, ledger_path, batch_id, "stream_pca_gram")
+    merged = ledger.read(batch.sparkSession, ledger_path)
     summary = merged.agg(
         F.max(
             F.when(F.col("idx") == _PCA_D * _PCA_D + _PCA_D, F.col("val"))
@@ -1246,7 +1172,6 @@ def ingest_dupgram_delta(
     posture dup_ngram_fraction needs at 100 TB where re-scanning the
     corpus to refresh df after every crawl batch is off the table."""
     from chess_pipeline_spark.plans.corpus import word_gram_postings
-    from chess_pipeline_spark.sinks import upsert_partition_overwrite
 
     delta = (
         word_gram_postings(batch)
@@ -1255,25 +1180,9 @@ def ingest_dupgram_delta(
         .agg(F.count("*").cast("long").alias("df"))
         .withColumn("batch_id", F.lit(batch_id))
     )
-    if _refuse_folded_batch_id(
-        ledger_dir, batch_id, "ingest_dupgram_delta", frame=delta
-    ):
-        return
-    upsert_partition_overwrite(delta, ledger_dir, ["batch_id"])
-
-
-def compact_dupgram_ledger(spark, ledger_dir: str) -> None:
-    """Fold the per-batch gram-df partitions into one batch-0
-    partition (sinks.compact_batch_ledger): the ledger's probe
-    (dup_exposure_from_ledger) sums df across batches, so the fold is
-    probe-invariant by construction; under continuous crawl ingest it
-    bounds the small-files count at vocab scale. Crash-idempotent via
-    the shared `_folded_batches.json` marker; ingest_dupgram_delta
-    refuses folded ids (a replay after the fold would double-count —
-    ledger addition is not idempotent)."""
-    from chess_pipeline_spark.sinks import compact_batch_ledger
-
-    compact_batch_ledger(spark, ledger_dir, ["gd"], sum_cols=["df"])
+    ADDITIVE_LEDGERS["dupgram"].ingest(
+        delta, ledger_dir, batch_id, "ingest_dupgram_delta"
+    )
 
 
 def stream_dupgram_ledger(docs: DataFrame, ledger_dir: str):
@@ -1308,7 +1217,6 @@ def ingest_spangram_delta(
     refresh occurrence counts after every crawl batch is off the
     table."""
     from chess_pipeline_spark.plans.corpus import span_positions
-    from chess_pipeline_spark.sinks import upsert_partition_overwrite
 
     delta = (
         span_positions(batch)
@@ -1316,22 +1224,9 @@ def ingest_spangram_delta(
         .agg(F.count("*").cast("long").alias("cnt"))
         .withColumn("batch_id", F.lit(batch_id))
     )
-    if _refuse_folded_batch_id(
-        ledger_dir, batch_id, "ingest_spangram_delta", frame=delta
-    ):
-        return
-    upsert_partition_overwrite(delta, ledger_dir, ["batch_id"])
-
-
-def compact_spangram_ledger(spark, ledger_dir: str) -> None:
-    """Fold the per-batch occurrence partitions into one batch-0
-    partition: the probe (spans_from_ledger) sums cnt across batches,
-    so the fold is probe-invariant by construction. Crash-idempotent
-    via the shared `_folded_batches.json` marker; ingest refuses
-    folded ids (occurrence addition is not idempotent)."""
-    from chess_pipeline_spark.sinks import compact_batch_ledger
-
-    compact_batch_ledger(spark, ledger_dir, ["gd"], sum_cols=["cnt"])
+    ADDITIVE_LEDGERS["spangram"].ingest(
+        delta, ledger_dir, batch_id, "ingest_spangram_delta"
+    )
 
 
 def stream_spangram_ledger(docs: DataFrame, ledger_dir: str):
@@ -1369,9 +1264,8 @@ def spans_from_ledger(spark, ledger_dir: str, docs: DataFrame) -> DataFrame:
 
     pos = span_positions(docs).localCheckpoint(eager=False)
     led = (
-        spark.read.parquet(ledger_dir)
-        .groupBy("gd")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+        ADDITIVE_LEDGERS["spangram"]
+        .read(spark, ledger_dir)
         .filter(F.col("cnt") >= 2)
         .select("gd")
     )
@@ -1396,11 +1290,7 @@ def dup_exposure_from_ledger(
     side's scan stage."""
     from chess_pipeline_spark.plans.corpus import exposure_fold, word_gram_postings
 
-    led = (
-        spark.read.parquet(ledger_dir)
-        .groupBy("gd")
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
+    led = ADDITIVE_LEDGERS["dupgram"].read(spark, ledger_dir)
     grams = word_gram_postings(docs).withColumn("gd", F.xxhash64("g"))
     return exposure_fold(grams.join(led, "gd"))
 
@@ -1426,7 +1316,6 @@ def ingest_dsir_delta(
     the p-model the accumulated counts were folded under. The ledger
     is <= _DSIR_B rows per batch — model-scale, not corpus-scale."""
     from chess_pipeline_spark.plans.corpus import _dsir_gram_buckets
-    from chess_pipeline_spark.sinks import upsert_partition_overwrite
 
     # recover BEFORE stamping (r12 ADVICE): stamping creates the live
     # directory for a fresh ledger, which would shadow a crashed
@@ -1453,21 +1342,7 @@ def ingest_dsir_delta(
         )
         .withColumn("batch_id", F.lit(batch_id))
     )
-    if _refuse_folded_batch_id(
-        ledger_dir, batch_id, "ingest_dsir_delta", frame=delta
-    ):
-        return
-    upsert_partition_overwrite(delta, ledger_dir, ["batch_id"])
-
-
-def compact_dsir_ledger(spark, ledger_dir: str) -> None:
-    """Fold the per-batch bucket-count partitions into one batch-0
-    partition; the serve path sums (cp, cq) across batches, so the
-    fold is probe-invariant by construction. Crash-idempotent via the
-    shared `_folded_batches.json` marker; ingest refuses folded ids."""
-    from chess_pipeline_spark.sinks import compact_batch_ledger
-
-    compact_batch_ledger(spark, ledger_dir, ["b"], sum_cols=["cp", "cq"])
+    ADDITIVE_LEDGERS["dsir"].ingest(delta, ledger_dir, batch_id, "ingest_dsir_delta")
 
 
 def stream_dsir_ledger(docs: DataFrame, ledger_dir: str, target_source: str):
@@ -1512,19 +1387,11 @@ def dsir_from_ledger(spark, ledger_dir: str, docs: DataFrame) -> DataFrame:
 
     grid = spark.range(_DSIR_B).select(F.col("id").cast("long").alias("b"))
     counts = (
-        grid.join(
-            spark.read.parquet(ledger_dir)
-            .groupBy("b")
-            .agg(
-                F.sum("cp").cast("long").alias("s_cp"),
-                F.sum("cq").cast("long").alias("s_cq"),
-            ),
+        grid.join(ADDITIVE_LEDGERS["dsir"].read(spark, ledger_dir), "b", "left")
+        .select(
             "b",
-            "left",
-        ).select(
-            "b",
-            F.coalesce("s_cp", F.lit(0)).cast("long").alias("cp"),
-            F.coalesce("s_cq", F.lit(0)).cast("long").alias("cq"),
+            F.coalesce("cp", F.lit(0)).cast("long").alias("cp"),
+            F.coalesce("cq", F.lit(0)).cast("long").alias("cq"),
         )
     )
     tot = counts.agg(

@@ -97,9 +97,8 @@ def run_compact(args: argparse.Namespace, spark=None) -> int:
     """One maintenance entry point for every persisted structure that
     accumulates per-batch partitions or appends under continuous
     ingest: the IVF lists delta, the BM25 text index, the additive
-    streaming ledgers (dup-gram df, CMS counters, value histogram,
-    PCA Gram cells, boilerplate chunk counts), and the set-union
-    append ledger (paragraph-dedup chunk digests). Each fold is
+    streaming ledgers (every `streaming.jobs.ADDITIVE_LEDGERS` kind),
+    and the set-union append ledger (paragraph-dedup chunk digests). Each fold is
     crash-idempotent and probe-invariant (law tests in
     tests/test_ann_index.py, test_text_index.py, test_streaming.py,
     test_r8_signals.py). The split ledger needs no compaction: its
@@ -129,29 +128,21 @@ def run_compact(args: argparse.Namespace, spark=None) -> int:
         from chess_pipeline_spark.text_index import compact_text_index
 
         compact_text_index(spark, args.path)
-    else:
-        from chess_pipeline_spark.streaming.jobs import (
-            compact_boilerplate_ledger,
-            compact_cms_ledger,
-            compact_dupgram_ledger,
-            compact_histogram_ledger,
-            compact_paragraph_ledger,
-            compact_pca_gram_ledger,
-        )
+    elif kind == "paragraph":
+        from chess_pipeline_spark.streaming.jobs import compact_paragraph_ledger
 
-        {
-            "dupgram": compact_dupgram_ledger,
-            "cms": compact_cms_ledger,
-            "histogram": compact_histogram_ledger,
-            "pca-gram": compact_pca_gram_ledger,
-            "paragraph": compact_paragraph_ledger,
-            "boiler": compact_boilerplate_ledger,
-        }[kind](spark, args.path)
+        compact_paragraph_ledger(spark, args.path)
+    else:
+        from chess_pipeline_spark.streaming.jobs import ADDITIVE_LEDGERS
+
+        ADDITIVE_LEDGERS[kind].compact(spark, args.path)
     print(f"compacted {kind} at {args.path}")
     return 0
 
 
 def main(argv: list[str] | None = None, spark=None) -> int:
+    from chess_pipeline_spark.streaming.jobs import ADDITIVE_LEDGERS
+
     p = argparse.ArgumentParser(description=__doc__)
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -184,18 +175,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         "digests; others raise until an operator intervenes)",
     )
     c.add_argument(
-        "--kind",
-        choices=[
-            "ivf",
-            "text",
-            "dupgram",
-            "cms",
-            "histogram",
-            "pca-gram",
-            "paragraph",
-            "boiler",
-        ],
-        required=True,
+        "--kind", choices=["ivf", "text", "paragraph", *ADDITIVE_LEDGERS], required=True
     )
     c.add_argument("--path", required=True, help="index/ledger directory")
 

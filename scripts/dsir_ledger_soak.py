@@ -38,7 +38,7 @@ from chess_pipeline_spark.checkpoints import (  # noqa: E402
 from chess_pipeline_spark.plans.corpus import dsir_importance_weights  # noqa: E402
 from chess_pipeline_spark.session import get_spark  # noqa: E402
 from chess_pipeline_spark.streaming.jobs import (  # noqa: E402
-    compact_dsir_ledger,
+    ADDITIVE_LEDGERS,
     dsir_from_ledger,
     ingest_dsir_delta,
 )
@@ -140,7 +140,7 @@ def main() -> None:
     led_pre = f"{work}/ledger_precompact"
     shutil.copytree(led, led_pre)
     t0 = time.perf_counter()
-    compact_dsir_ledger(spark, led)
+    ADDITIVE_LEDGERS["dsir"].compact(spark, led)
     out["compact_s"] = round(time.perf_counter() - t0, 3)
     out["files_after"] = n_parquet_files(led)
     with scoped_checkpoints(spark):

@@ -41,10 +41,9 @@ import pyspark.sql.functions as F  # noqa: E402
 from chess_pipeline_spark.session import get_spark  # noqa: E402
 from chess_pipeline_spark.sources import load_table  # noqa: E402
 from chess_pipeline_spark.streaming.jobs import (  # noqa: E402
+    ADDITIVE_LEDGERS,
     _boiler_process_batch,
     _paragraph_process_batch,
-    compact_boilerplate_ledger,
-    compact_dupgram_ledger,
     compact_paragraph_ledger,
     dup_exposure_from_ledger,
     ingest_dupgram_delta,
@@ -110,12 +109,11 @@ def main() -> None:
                 b, i, f"{work}/bp_ledger", f"{work}/bp_verdicts"
             ),
             "path": f"{work}/bp_ledger",
-            "compact": lambda: compact_boilerplate_ledger(
+            "compact": lambda: ADDITIVE_LEDGERS["boiler"].compact(
                 spark, f"{work}/bp_ledger"
             ),
-            "probe": lambda: spark.read.parquet(f"{work}/bp_ledger")
-            .groupBy("digest")
-            .agg(F.sum("inc"))
+            "probe": lambda: ADDITIVE_LEDGERS["boiler"]
+            .read(spark, f"{work}/bp_ledger")
             .count(),
         },
         "dupgram": {
@@ -123,7 +121,9 @@ def main() -> None:
                 b, f"{work}/dg_ledger", i
             ),
             "path": f"{work}/dg_ledger",
-            "compact": lambda: compact_dupgram_ledger(spark, f"{work}/dg_ledger"),
+            "compact": lambda: ADDITIVE_LEDGERS["dupgram"].compact(
+                spark, f"{work}/dg_ledger"
+            ),
             "probe": lambda: dup_exposure_from_ledger(
                 spark, f"{work}/dg_ledger", docs.limit(50)
             ).count(),

@@ -49,7 +49,7 @@ from chess_pipeline_spark.checkpoints import (  # noqa: E402
 from chess_pipeline_spark.plans.corpus import exact_substring_spans  # noqa: E402
 from chess_pipeline_spark.session import get_spark  # noqa: E402
 from chess_pipeline_spark.streaming.jobs import (  # noqa: E402
-    compact_spangram_ledger,
+    ADDITIVE_LEDGERS,
     ingest_spangram_delta,
     spans_from_ledger,
 )
@@ -163,7 +163,7 @@ def main() -> None:
     shutil.copytree(led, led_pre)
 
     t0 = time.perf_counter()
-    compact_spangram_ledger(spark, led)
+    ADDITIVE_LEDGERS["spangram"].compact(spark, led)
     out["compact_s"] = round(time.perf_counter() - t0, 3)
     out["files_after"] = n_parquet_files(led)
     # compaction is probe-invariant

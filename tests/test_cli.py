@@ -275,8 +275,8 @@ def test_rotation_tool_reads_history_and_flags_deficit(capsys):
 
 def test_cli_compact_subcommand(spark, sf_dir, tmp_path):
     """`ann_index_cli compact` is the one maintenance entry point for
-    every per-batch-partitioned structure; smoke the text-index and
-    dup-gram ledger kinds end-to-end: fold to a single batch-0
+    every per-batch-partitioned structure; smoke the text-index,
+    dup-gram and DSIR ledger kinds end-to-end: fold to a single batch-0
     layout, probes unchanged."""
     import os
 
@@ -327,6 +327,22 @@ def test_cli_compact_subcommand(spark, sf_dir, tmp_path):
     assert sorted(
         map(tuple, dup_exposure_from_ledger(spark, led, docs).collect())
     ) == want_led
+
+    # every additive ledger kind routes there too, DSIR included
+    from chess_pipeline_spark.streaming.jobs import dsir_from_ledger, ingest_dsir_delta
+
+    dled = str(tmp_path / "dsir_ledger")
+    target = docs.agg(F.min("source")).first()[0]
+    ingest_dsir_delta(docs.filter(F.col("doc_id") <= mid), dled, 0, target)
+    ingest_dsir_delta(docs.filter(F.col("doc_id") > mid), dled, 1, target)
+    want_dsir = sorted(map(tuple, dsir_from_ledger(spark, dled, docs).collect()))
+    rc = ann_index_cli.main(["compact", "--kind", "dsir", "--path", dled], spark=spark)
+    assert rc == 0
+    assert sorted(
+        d for d in os.listdir(dled) if d.startswith("batch_id=")
+    ) == ["batch_id=0"]
+    got = sorted(map(tuple, dsir_from_ledger(spark, dled, docs).collect()))
+    assert got == want_dsir
 
     # r10: the set-union/append family routes through the same entry
     # point — paragraph digest set folds to one distinct row per

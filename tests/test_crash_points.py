@@ -130,7 +130,7 @@ def test_upsert_parquet_crash_points(spark, tmp_path, monkeypatch):
 
 def test_additive_ledger_crash_points(spark, tmp_path, monkeypatch):
     from chess_pipeline_spark.streaming.jobs import (
-        compact_dsir_ledger,
+        ADDITIVE_LEDGERS,
         ingest_dsir_delta,
     )
 
@@ -147,7 +147,7 @@ def test_additive_ledger_crash_points(spark, tmp_path, monkeypatch):
         monkeypatch,
         tpl,
         work,
-        lambda: compact_dsir_ledger(spark, led),
+        lambda: ADDITIVE_LEDGERS["dsir"].compact(spark, led),
         lambda: (
             _rows(
                 spark.read.parquet(commit.readable(led))
@@ -161,6 +161,42 @@ def test_additive_ledger_crash_points(spark, tmp_path, monkeypatch):
         replay=lambda: ingest_dsir_delta(b0, led, 1, "a_t"),
     )
     assert n == 4  # folded + digests sidecars, then the two renames
+
+
+@pytest.mark.parametrize("kind", ["dupgram", "spangram"])
+def test_gram_probe_reads_through_crashed_compaction(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A compaction that crashed at its 4th step (live → `.__bak__`
+    done, tmp → live not) leaves the ledger only in its .bak; the
+    dup-gram and span-gram probes read it there, as the DSIR probe does,
+    and return the uncrashed rows."""
+    from chess_pipeline_spark.streaming import jobs
+
+    ingest, probe = {
+        "dupgram": (jobs.ingest_dupgram_delta, jobs.dup_exposure_from_ledger),
+        "spangram": (jobs.ingest_spangram_delta, jobs.spans_from_ledger),
+    }[kind]
+    shared = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = spark.createDataFrame(
+        [
+            (1, "a", f"{shared} at dawn"),
+            (2, "b", f"one two three four five six seven eight nine ten {shared}"),
+            (3, "a", f"{shared} again today"),
+            (4, "b", "eleven twelve thirteen fourteen fifteen sixteen seventeen"),
+        ],
+        "doc_id long, source string, text string",
+    )
+    led = str(tmp_path / "led")
+    ingest(docs.filter("doc_id <= 2"), led, 0)
+    ingest(docs.filter("doc_id > 2"), led, 1)
+    want = _rows(probe(spark, led, docs))
+    _hook(monkeypatch, 4)
+    with pytest.raises(_Crash):
+        jobs.ADDITIVE_LEDGERS[kind].compact(spark, led)
+    monkeypatch.undo()
+    assert not os.path.exists(led) and os.path.exists(led + commit.BAK)
+    assert _rows(probe(spark, led, docs)) == want
 
 
 def test_append_ledger_crash_points(spark, tmp_path, monkeypatch):
@@ -341,7 +377,7 @@ def test_empty_partition_dirs_are_not_batches(spark, tmp_path):
     replay that heals the crashed batch is accepted."""
     from chess_pipeline_spark.ann_index import _read_lists, compact_ivf_index
     from chess_pipeline_spark.streaming.jobs import (
-        compact_dsir_ledger,
+        ADDITIVE_LEDGERS,
         ingest_dsir_delta,
     )
     from chess_pipeline_spark.text_index import (
@@ -422,7 +458,7 @@ def test_empty_partition_dirs_are_not_batches(spark, tmp_path):
     ingest_dsir_delta(dsir, led, 1, "a_t")
     staged(led, ".spark-staging-x", "batch_id=2")
     assert commit.batch_ids(led, "batch_id") == {0, 1}
-    compact_dsir_ledger(spark, led)
+    ADDITIVE_LEDGERS["dsir"].compact(spark, led)
     assert commit.read_folded(led) == {0, 1}
     assert "2" not in commit.read_json(os.path.join(led, commit.DIGESTS), {})
     ingest_dsir_delta(dsir, led, 2, "a_t")

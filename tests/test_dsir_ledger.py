@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from chess_pipeline_spark.plans.corpus import dsir_importance_weights
 from chess_pipeline_spark.sources import load_table
 from chess_pipeline_spark.streaming.jobs import (
-    compact_dsir_ledger,
+    ADDITIVE_LEDGERS,
     dsir_from_ledger,
     ingest_dsir_delta,
     stream_dsir_ledger,
@@ -68,7 +68,7 @@ def test_dsir_ledger_stream_equals_batch(spark, sf_dir, tmp_path):
     assert _rows(dsir_from_ledger(spark, led, docs)) == want
 
     # compaction is probe-invariant
-    compact_dsir_ledger(spark, led)
+    ADDITIVE_LEDGERS["dsir"].compact(spark, led)
     assert _rows(dsir_from_ledger(spark, led, docs)) == want
 
     # a different pinned target refuses instead of silently folding
@@ -150,7 +150,7 @@ def test_dsir_ingest_restores_bak_before_stamp(spark, tmp_path):
     assert _rows(dsir_from_ledger(spark, led, probe)) == want
 
     # and the next compaction keeps the restored whole, not a fork
-    compact_dsir_ledger(spark, led)
+    ADDITIVE_LEDGERS["dsir"].compact(spark, led)
     assert _rows(dsir_from_ledger(spark, led, probe)) == want
 
 

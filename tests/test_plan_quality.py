@@ -1295,7 +1295,7 @@ def test_kernel_forms_pinned_fold_vs_zipwith():
         )
 
     # PQ subspace kernels: the fold, never slice()/zip_with per pair
-    for fn in (ann_index._pq_subdist, ann_index._encode_rows):
+    for fn in (ann_index._pq_subspace_l2,):
         src = code_only(inspect.getsource(fn))
         assert "aggregate(sequence(" in src, fn.__name__
         assert "element_at(embedding" in src, fn.__name__

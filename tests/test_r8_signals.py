@@ -233,10 +233,12 @@ def test_dupgram_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
 
     from chess_pipeline_spark.sources.tables import load_table
     from chess_pipeline_spark.streaming.jobs import (
-        compact_dupgram_ledger,
+        ADDITIVE_LEDGERS,
         dup_exposure_from_ledger,
         ingest_dupgram_delta,
     )
+
+    ledger = ADDITIVE_LEDGERS["dupgram"]
 
     docs = load_table(spark, sf_dir, "documents")
     mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).first()[0]
@@ -257,16 +259,16 @@ def test_dupgram_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
     assert batch_dirs() == ["batch_id=0", "batch_id=1"]
     want = probe()
 
-    compact_dupgram_ledger(spark, led)
+    ledger.compact(spark, led)
     assert batch_dirs() == ["batch_id=0"]
     assert probe() == want  # probe-invariant fold
 
-    compact_dupgram_ledger(spark, led)  # replayed compaction: no-op
+    ledger.compact(spark, led)  # replayed compaction: no-op
     assert probe() == want
 
     # mid-swap crash: ledger renamed to .bak, tmp never landed
     os.rename(led, f"{led}.__bak__")
-    compact_dupgram_ledger(spark, led)
+    ledger.compact(spark, led)
     assert os.path.exists(led) and not os.path.exists(f"{led}.__bak__")
     assert probe() == want
 
@@ -285,7 +287,7 @@ def test_dupgram_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
     # a genuinely new batch still ingests and folds
     extra = hi.limit(3).withColumn("doc_id", F.col("doc_id") + 1000000)
     ingest_dupgram_delta(extra, led, 2)
-    compact_dupgram_ledger(spark, led)
+    ledger.compact(spark, led)
     assert batch_dirs() == ["batch_id=0"]
     total_df = (
         spark.read.parquet(led).agg(F.sum("df")).first()[0]

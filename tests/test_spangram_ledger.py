@@ -5,7 +5,7 @@ the ledger streamed batch-by-batch serves rollups byte-identical to
 the batch query, at-least-once replay rewrites identical bytes and
 changes nothing, and compaction is probe-invariant with the folded-id
 ingest guard engaged. The crash/bak-swap/digest-guard internals are
-the SHARED compact_batch_ledger machinery, exhaustively covered by
+the SHARED sinks.AdditiveLedger machinery, exhaustively covered by
 the dup-gram and CMS ledger suites — this file pins the span
 semantics (occurrence counts, not df) on top of it.
 """
@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from chess_pipeline_spark.plans.corpus import exact_substring_spans
 from chess_pipeline_spark.sources.tables import load_table
 from chess_pipeline_spark.streaming.jobs import (
-    compact_spangram_ledger,
+    ADDITIVE_LEDGERS,
     ingest_spangram_delta,
     spans_from_ledger,
     stream_spangram_ledger,
@@ -92,7 +92,7 @@ def test_spangram_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
     before = _rows(spans_from_ledger(spark, led, docs))
     assert before == _rows(exact_substring_spans(spark, sf_dir))
 
-    compact_spangram_ledger(spark, led)
+    ADDITIVE_LEDGERS["spangram"].compact(spark, led)
     after = _rows(spans_from_ledger(spark, led, docs))
     assert after == before
     # one physical batch partition remains

@@ -1143,7 +1143,7 @@ def test_commutative_ledgers_are_delivery_order_independent(spark, sf_dir, tmp_p
 def test_additive_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
     """r9 maintenance parity across the ADDITIVE batch-partition
     ledgers (CMS counters, value histogram, PCA Gram cells):
-    sinks.compact_batch_ledger folds the per-batch partitions into
+    each ledger's declared compaction folds the per-batch partitions into
     batch 0 with the fold that IS each probe's cross-batch
     aggregation, so merged state is identical before/after; a
     replayed compaction is a no-op; ingest under a folded id with
@@ -1160,12 +1160,10 @@ def test_additive_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
 
     from chess_pipeline_spark.sources import load_table
     from chess_pipeline_spark.streaming.jobs import (
+        ADDITIVE_LEDGERS,
         _cms_process_batch,
         _pca_gram_process_batch,
         _value_hist_process_batch,
-        compact_cms_ledger,
-        compact_histogram_ledger,
-        compact_pca_gram_ledger,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1180,7 +1178,7 @@ def test_additive_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
             "cms",
             lambda b, i, led, snap: _cms_process_batch(b, i, led, snap),
             (docs.filter(F.col("doc_id") <= dmid), docs.filter(F.col("doc_id") > dmid)),
-            compact_cms_ledger,
+            ADDITIVE_LEDGERS["cms"].compact,
             ["row_i", "bucket"],
             "cnt",
         ),
@@ -1191,7 +1189,7 @@ def test_additive_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
                 events.filter(F.col("event_id") <= emid),
                 events.filter(F.col("event_id") > emid),
             ),
-            compact_histogram_ledger,
+            ADDITIVE_LEDGERS["histogram"].compact,
             ["event_type", "bin"],
             "cnt",
         ),
@@ -1202,7 +1200,7 @@ def test_additive_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
                 embs.filter(F.col("vec_id") <= vmid),
                 embs.filter(F.col("vec_id") > vmid),
             ),
-            compact_pca_gram_ledger,
+            ADDITIVE_LEDGERS["pca-gram"].compact,
             ["idx"],
             "val",
         ),
@@ -1268,11 +1266,13 @@ def test_append_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
 
     from chess_pipeline_spark.sources import load_table
     from chess_pipeline_spark.streaming.jobs import (
+        ADDITIVE_LEDGERS,
         _boiler_process_batch,
         _paragraph_process_batch,
-        compact_boilerplate_ledger,
         compact_paragraph_ledger,
     )
+
+    boiler_ledger = ADDITIVE_LEDGERS["boiler"]
 
     docs = load_table(spark, sf_dir, "documents")
     mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).first()[0]
@@ -1356,10 +1356,10 @@ def test_append_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
     # old append layout double-counted a replayed batch)
     _boiler_process_batch(hi, 1, bled, bver)
     assert counts() == bwant
-    compact_boilerplate_ledger(spark, bled)
+    boiler_ledger.compact(spark, bled)
     assert counts() == bwant  # prior-count probe invariant
     assert spark.read.parquet(bled).count() == len(bwant)  # one row/digest
-    compact_boilerplate_ledger(spark, bled)  # replayed compaction: no-op
+    boiler_ledger.compact(spark, bled)  # replayed compaction: no-op
     assert counts() == bwant
     # post-fold identical replay self-heals via the digest guard
     import pytest as _pytest
@@ -1372,7 +1372,7 @@ def test_append_ledger_compaction_probe_invariant(spark, sf_dir, tmp_path):
         _boiler_process_batch(lo, 1, bled, bver)
     assert counts() == bwant
     os.rename(bled, f"{bled}.__bak__")
-    compact_boilerplate_ledger(spark, bled)
+    boiler_ledger.compact(spark, bled)
     assert os.path.exists(bled) and not os.path.exists(f"{bled}.__bak__")
     assert counts() == bwant
 

@@ -372,8 +372,10 @@ def test_compaction_sweeps_stale_tmp_dirs(spark, sf_dir, tmp_path):
     so any surviving tmp is garbage)."""
     import os
 
-    from chess_pipeline_spark.sinks import compact_batch_ledger
-    from chess_pipeline_spark.streaming.jobs import ingest_dupgram_delta
+    from chess_pipeline_spark.streaming.jobs import (
+        ADDITIVE_LEDGERS,
+        ingest_dupgram_delta,
+    )
     from chess_pipeline_spark.text_index import compact_text_index
 
     docs = load_table(spark, sf_dir, "documents")
@@ -394,7 +396,7 @@ def test_compaction_sweeps_stale_tmp_dirs(spark, sf_dir, tmp_path):
     ingest_dupgram_delta(docs.filter(F.col("doc_id") > mid), led, 1)
     stale = f"{led}.__tmp__cafebabe"
     os.makedirs(stale)
-    compact_batch_ledger(spark, led, ["gd"], sum_cols=["df"])
+    ADDITIVE_LEDGERS["dupgram"].compact(spark, led)
     assert not os.path.exists(stale)
 
 
