@@ -176,9 +176,16 @@ def _data_files(top: str):
                 yield dirpath, name
 
 
+def first_data_file(top: str) -> str | None:
+    """Path of one data file under ``top`` (None when it holds none)."""
+    for dirpath, name in _data_files(top):
+        return os.path.join(dirpath, name)
+    return None
+
+
 def has_data(top: str) -> bool:
     """Whether any data file sits under ``top`` (False when absent)."""
-    return next(_data_files(top), None) is not None
+    return first_data_file(top) is not None
 
 
 def _partitions(root: str, col: str):

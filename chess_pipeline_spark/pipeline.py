@@ -321,26 +321,64 @@ def materialize_corpus(out: CorpusEtlOutput, base_path: str) -> None:
         upsert_parquet(df, f"{base_path}/{name}", ["doc_id"])
 
 
+# each loaded table's delete-then-insert key (db/tables/*.sql)
+TABLE_KEYS = {
+    "chess_games": ["player", "game_link"],
+    "game_moves": ["game_link", "half_move"],
+    "game_clocks": ["game_link", "half_move"],
+    "game_positions": ["game_link", "half_move"],
+    "game_materials": ["game_link", "half_move"],
+    "position_evals": ["fen"],
+    "win_probabilities": ["game_link", "half_move"],
+}
+
+
 def materialize(out: GameEtlOutput, base_path: str) -> None:
     """The seven load_* steps as idempotent parquet upserts
-    (postgres_templates.py:13-157 -> sinks.upsert_parquet)."""
-    from chess_pipeline_spark.sinks import upsert_parquet
+    (postgres_templates.py:13-157 -> sinks.upsert_parquet), written
+    concurrently: one pool thread for each of the six tables ahead of
+    position_evals, so the upserts' short Spark jobs overlap instead of
+    queueing behind each other.
 
-    keys = {
-        "chess_games": ["player", "game_link"],
-        "game_moves": ["game_link", "half_move"],
-        "game_clocks": ["game_link", "half_move"],
-        "game_positions": ["game_link", "half_move"],
-        "game_materials": ["game_link", "half_move"],
-        "position_evals": ["fen"],
-        "win_probabilities": ["game_link", "half_move"],
-    }
-    # position_evals LAST: win_probabilities' lazy plan reads the
-    # eval cache, which in the incremental flow IS the old
-    # {base_path}/position_evals files — upserting that table first
-    # would swap away part-files a later write still references
-    order = sorted(out.tables(), key=lambda n: n == "position_evals")
+    ``cleaned`` is computed into its cache first, so the threads share
+    it instead of each re-running the parse. position_evals is written
+    LAST, after every other table has committed: win_probabilities'
+    lazy plan reads the eval cache, which in the incremental flow IS
+    the old {base_path}/position_evals files, and swapping that table
+    first would delete part-files a running write still reads. The
+    pool threads inherit the caller's job group and local properties
+    (inheritable_thread_target), so the caller can still see and
+    cancel every job. Every table is waited for; the first error is
+    then re-raised. Each table commits atomically on its own
+    (commit.replace_dir), so a failed import leaves every table either
+    old or new."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    from chess_pipeline_spark import sinks
+
     tables = out.tables()
-    for name in order:
-        upsert_parquet(tables[name], f"{base_path}/{name}", keys[name])
-    out.unpersist()
+    last = tables.pop("position_evals")
+
+    def write(name: str, df: DataFrame) -> None:
+        # looked up per call, so a wrapped sinks.upsert_parquet applies
+        sinks.upsert_parquet(df, f"{base_path}/{name}", TABLE_KEYS[name])
+
+    spark = out.cleaned.sparkSession
+    try:
+        # fills the cache in one job per stage: a count would add an
+        # aggregation stage
+        out.cleaned.write.format("noop").mode("overwrite").save()
+        with ThreadPoolExecutor(len(tables)) as pool:
+            # wrapped per table: each thread gets its own copy of the
+            # caller's properties to set its job group on
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(write), name, df)
+                for name, df in tables.items()
+            ]
+        for f in futures:  # all done: re-raises the first table's error
+            f.result()
+        write("position_evals", last)
+    finally:
+        out.unpersist()

@@ -9,10 +9,13 @@ columns). Spark-native equivalents, in preference order:
    date/entity-partitioned layouts: rewrite only the partitions the
    batch touches. The 100 TB default: no read of existing data, no
    shuffle beyond the write, idempotent per partition.
-2. ``upsert_parquet`` — key-level merge for unpartitioned targets:
-   read target, anti-join away rows whose keys are in the batch,
-   union the batch, rewrite atomically (commit.replace_dir). The
-   MERGE-emulation pattern for lakehouse-less deployments.
+2. ``upsert_parquet`` — key-level merge for unpartitioned targets,
+   in one keyed pass: the target's rows and the batch's, unioned, go
+   through one range shuffle on the keys and one window that flags
+   the keys the batch replaces; the flagged target rows drop and the
+   result is rewritten atomically (commit.replace_dir). The batch is
+   planned once and the target scanned once. The MERGE-emulation
+   pattern for lakehouse-less deployments.
 3. ``upsert_jdbc_staging`` — the staging-table + MERGE/DELETE+INSERT
    plan for real JDBC targets; generates the SQL and stages via
    df.write.jdbc (exercised only when a JDBC url/driver is present).
@@ -23,12 +26,14 @@ Column-intersection loading (postgres_templates.py:187-203) is
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from dataclasses import dataclass
+from functools import reduce
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 
 from chess_pipeline_spark import commit
 
@@ -168,16 +173,46 @@ class AdditiveLedger:
         )
 
 
+def _read_spark_written(spark, path: str) -> DataFrame:
+    """The parquet table at ``path``, read with the schema Spark's
+    writer stored in the footer of one of its files: the schema that
+    spark.read.parquet would infer from that footer, but without the
+    Spark job the inference runs. A table no Spark writer produced is
+    inferred as usual."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    first = commit.first_data_file(path)
+    meta = (pq.read_metadata(first).metadata or {}) if first else {}
+    stored = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if stored is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(StructType.fromJson(json.loads(stored))).parquet(path)
+
+
 def upsert_parquet(df: DataFrame, path: str, keys: list[str]) -> None:
     """Key-level delete-then-insert into a parquet target.
 
     New batch wins on key collision (the reference's DELETE …
     IN (SELECT DISTINCT keys FROM batch) + INSERT,
-    postgres_templates.py:192-203: anti-join ≙ the delete, union ≙
-    the insert). ALL batch rows are inserted — the reference's
-    SELECT DISTINCT applies only to the delete's key probe, so a
-    batch carrying two rows for one key keeps both (deduping here
+    postgres_templates.py:192-203). ALL batch rows are inserted — the
+    reference's SELECT DISTINCT applies only to the delete's key probe,
+    so a batch carrying two rows for one key keeps both (deduping here
     would nondeterministically discard one).
+
+    One keyed pass: the existing rows and the batch rows, each tagged
+    with their side, are unioned, range-partitioned on the keys, and
+    one window over the keys flags every key the batch carries; the
+    write keeps the batch rows and the existing rows of unflagged keys.
+    So the plan holds one range shuffle and one window, the existing
+    table is scanned once, and every stage of the batch runs once (the
+    range sampler re-reads only the batch's last stage: its narrow
+    projection over a shuffle or a persisted frame). Range partitioning
+    keeps each game's plies in one file, sorted. An existing row with a
+    NULL key always survives, as under the delete's equi-join; columns
+    of one side missing from the other come back null-filled; the
+    output columns come keys first, then the existing table's, then
+    the batch's own.
 
     Local-filesystem targets only (commit.replace_dir renames);
     cluster deployments use upsert_partition_overwrite or a lakehouse
@@ -187,15 +222,25 @@ def upsert_parquet(df: DataFrame, path: str, keys: list[str]) -> None:
             f"upsert_parquet only supports local paths, got {path!r}; "
             "use upsert_partition_overwrite for remote filesystems"
         )
-    spark = df.sparkSession
-    batch = df
     commit.recover(path)
     if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        keep = existing.join(batch.select(*keys).distinct(), keys, "left_anti")
-        merged = keep.unionByName(batch, allowMissingColumns=True)
+        existing = _read_spark_written(df.sparkSession, path)
+        cols = [*keys, *(c for c in existing.columns if c not in keys)]
+        cols += [c for c in df.columns if c not in cols]
+        new, hit = "__upsert_new", "__upsert_hit"
+        rows = (
+            existing.withColumn(new, F.lit(False))
+            .unionByName(df.withColumn(new, F.lit(True)), allowMissingColumns=True)
+            .repartitionByRange(*keys)
+        )
+        null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
+        merged = (
+            rows.withColumn(hit, F.max(new).over(Window.partitionBy(*keys)))
+            .filter(F.col(new) | ~F.col(hit) | null_key)
+            .select(*cols)
+        )
     else:
-        merged = batch
+        merged = df
     commit.replace_dir(path, lambda tmp: merged.write.mode("overwrite").parquet(tmp))
 
 

@@ -1379,15 +1379,21 @@ def dsir_from_ledger(spark, ledger_dir: str, docs: DataFrame) -> DataFrame:
     from chess_pipeline_spark.plans.corpus import _DSIR_B, _dsir_gram_buckets
 
     # the ledger and its _target.json are read wherever a crashed
-    # compaction left them (commit.readable)
+    # compaction left them (commit.readable); a missing ledger fails in
+    # its reader as [PATH_NOT_FOUND], as the dup-gram probe does
     ledger_dir = commit.readable(ledger_dir)
-    target_source = commit.read_json(os.path.join(ledger_dir, commit.TARGET))[
-        "target_source"
-    ]
+    ledger = ADDITIVE_LEDGERS["dsir"].read(spark, ledger_dir)
+    stamp = commit.read_json(os.path.join(ledger_dir, commit.TARGET))
+    if stamp is None:
+        raise ValueError(
+            f"DSIR ledger at {ledger_dir} has no {commit.TARGET} target "
+            "stamp, so its counts cannot be scored"
+        )
+    target_source = stamp["target_source"]
 
     grid = spark.range(_DSIR_B).select(F.col("id").cast("long").alias("b"))
     counts = (
-        grid.join(ADDITIVE_LEDGERS["dsir"].read(spark, ledger_dir), "b", "left")
+        grid.join(ledger, "b", "left")
         .select(
             "b",
             F.coalesce("cp", F.lit(0)).cast("long").alias("cp"),

@@ -116,10 +116,18 @@ def run_compact(args: argparse.Namespace, spark=None) -> int:
     rows aren't byte-identical — or any structure without digests
     (ivf, text) — raises until an operator intervenes. Quiescing
     first removes the window entirely."""
+    import os
+
+    from chess_pipeline_spark import commit
     from chess_pipeline_spark.session import get_spark
 
-    spark = spark or get_spark(app_name="index-compact")
     kind = args.kind
+    # the compactions no-op on an absent directory (nothing to fold),
+    # so a mistyped path must fail here; a crashed swap's .bak counts
+    if not os.path.exists(commit.readable(args.path)):
+        print(f"no {kind} index or ledger at {args.path}", file=sys.stderr)
+        return 2
+    spark = spark or get_spark(app_name="index-compact")
     if kind == "ivf":
         from chess_pipeline_spark.ann_index import compact_ivf_index
 

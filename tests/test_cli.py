@@ -273,7 +273,7 @@ def test_rotation_tool_reads_history_and_flags_deficit(capsys):
     assert rc == 0
 
 
-def test_cli_compact_subcommand(spark, sf_dir, tmp_path):
+def test_cli_compact_subcommand(spark, sf_dir, tmp_path, capsys):
     """`ann_index_cli compact` is the one maintenance entry point for
     every per-batch-partitioned structure; smoke the text-index,
     dup-gram and DSIR ledger kinds end-to-end: fold to a single batch-0
@@ -343,6 +343,13 @@ def test_cli_compact_subcommand(spark, sf_dir, tmp_path):
     ) == ["batch_id=0"]
     got = sorted(map(tuple, dsir_from_ledger(spark, dled, docs).collect()))
     assert got == want_dsir
+
+    # a mistyped path fails, naming it, instead of reporting a fold
+    missing = str(tmp_path / "dsir_ledgr")
+    rc = ann_index_cli.main(["compact", "--kind", "dsir", "--path", missing], spark=spark)
+    assert rc != 0
+    assert f"no dsir index or ledger at {missing}" in capsys.readouterr().err
+    assert not os.path.exists(missing)
 
     # r10: the set-union/append family routes through the same entry
     # point — paragraph digest set folds to one distinct row per

@@ -291,3 +291,28 @@ def test_dsir_resample_topk_law(spark, sf_dir):
     sel_mean = sum(r[2] for r in got) / len(got)
     all_mean = sum(lw for _, lw in w.values()) / len(w)
     assert sel_mean > all_mean
+
+
+@pytest.mark.parametrize("probe", ["dsir_from_ledger", "dup_exposure_from_ledger"])
+def test_ledger_probe_of_missing_ledger_raises_path_not_found(spark, tmp_path, probe):
+    """A probe of a ledger that was never written fails in the reader,
+    naming the path, for both the DSIR and the dup-gram probe."""
+    from pyspark.errors import AnalysisException
+
+    from chess_pipeline_spark.streaming import jobs
+
+    docs = spark.createDataFrame([(1, "a", "x y z")], "doc_id long, source string, text string")
+    missing = str(tmp_path / "no_ledger")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        getattr(jobs, probe)(spark, missing, docs)
+
+
+def test_dsir_probe_of_unstamped_ledger_names_the_directory(spark, tmp_path):
+    """Counts without their target stamp cannot be scored: the probe
+    refuses, naming the ledger directory."""
+    led = str(tmp_path / "dsir_ledger")
+    rows = spark.createDataFrame([(0, 1, 1, 0)], "b long, cp long, cq long, batch_id int")
+    rows.write.partitionBy("batch_id").parquet(led)
+    docs = spark.createDataFrame([(1, "a", "x y z")], "doc_id long, source string, text string")
+    with pytest.raises(ValueError, match=f"DSIR ledger at {led} has no _target.json"):
+        dsir_from_ledger(spark, led, docs)

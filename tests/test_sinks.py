@@ -24,24 +24,65 @@ def _rows(df):
 def test_upsert_parquet_new_batch_wins(spark, tmp_path):
     path = str(tmp_path / "target")
     base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "k int, name string, v int"
+        [("a", 1, 10, "o1"), ("b", 2, 20, "o2"), ("c", 3, 30, "o3"), ("n", None, 0, "o4")],
+        "name string, k int, v int, old string",
     )
     upsert_parquet(base, path, keys=["k"])
     batch = spark.createDataFrame(
-        [(2, "b2", 99), (4, "d", 40), (4, "d", 40)], "k int, name string, v int"
+        [(2, "b2", 99, "x"), (4, "d", 40, "x"), (4, "d", 40, "x"), (None, "n2", 1, "x")],
+        "k int, name string, v int, extra string",
     )
     upsert_parquet(batch, path, keys=["k"])
 
-    got = _rows(spark.read.parquet(path))
+    got = spark.read.parquet(path)
+    # keys first, then the existing table's columns, then the batch's
+    assert got.columns == ["k", "name", "v", "old", "extra"]
     # ALL batch rows are inserted (the reference's SELECT DISTINCT
-    # is only the delete's key probe): duplicate-key batch rows stay
-    assert got == [
-        (1, "a", 10),
-        (2, "b2", 99),
-        (3, "c", 30),
-        (4, "d", 40),
-        (4, "d", 40),
-    ]
+    # is only the delete's key probe): duplicate-key batch rows stay.
+    # A NULL key never matches (the delete is an equi-join), so the
+    # existing NULL-key row survives the batch's NULL-key row. Columns
+    # one side lacks come back null-filled.
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        [
+            (1, "a", 10, "o1", None),
+            (2, "b2", 99, None, "x"),
+            (3, "c", 30, "o3", None),
+            (4, "d", 40, None, "x"),
+            (4, "d", 40, None, "x"),
+            (None, "n", 0, "o4", None),
+            (None, "n2", 1, None, "x"),
+        ],
+        key=repr,
+    )
+
+
+def test_upsert_parquet_runs_each_batch_stage_once(spark, tmp_path):
+    """The upsert plans the batch once. The batch here is an aggregate
+    whose key a Python UDF computes, as the ETL's tables sit on the
+    parse UDF below their joins: the UDF counts its calls, one per
+    input row. A plan that probes the batch's keys and unions the
+    batch apart runs that stage more than once (300 calls), since the
+    copies are pruned differently and cannot share an exchange. The
+    range shuffle's sampler re-reads the batch's shuffled output, not
+    its input."""
+    import pyspark.sql.functions as F
+
+    path = str(tmp_path / "target")
+    upsert_parquet(spark.range(50).toDF("k").withColumn("v", F.lit(0)), path, ["k"])
+    calls = spark.sparkContext.accumulator(0)
+
+    def key(x):
+        calls.add(1)
+        return x % 40
+
+    raw = spark.range(100).withColumn("k", F.udf(key, "long")("id"))
+    batch = raw.groupBy("k").agg(F.count("*").alias("v"))
+    upsert_parquet(batch, path, ["k"])
+
+    assert calls.value == 100
+    got = dict(spark.read.parquet(path).collect())
+    assert len(got) == 50 and {got[k] for k in range(40)} == {2, 3}
+    assert {got[k] for k in range(40, 50)} == {0}
 
 
 def test_upsert_parquet_idempotent(spark, tmp_path):
