@@ -22,7 +22,11 @@ dependency-free.
 All inputs are the TINY driver-side aggregates the Spark operators
 produce (get_color_stats: categories x colors rows;
 get_elo_by_weekday: 7 rows) — collecting them is correct, not a
-scale smell.
+scale smell. Each report frame is collected as its one shuffle stage
+plus the result stage and ordered here on the driver
+(_sorted_rows, Spark's ascending NULLS FIRST order): a Spark orderBy
+would add a range exchange and a sampling job to every collect of a
+few rows.
 """
 
 from __future__ import annotations
@@ -35,12 +39,22 @@ from pyspark.sql import DataFrame
 _EMPTY_COLOR_TEXT = "Wait a second, no you didn't!"
 
 
+def _sorted_rows(df: DataFrame, *cols: str) -> list:
+    """df's rows collected and sorted by cols ascending, NULLs first:
+    the order a Spark sort on cols gives. Strings compare by code
+    point, which orders as Spark's UTF-8 byte compare does."""
+    return sorted(
+        df.collect(),
+        key=lambda r: tuple((r[c] is not None, r[c]) for c in cols),
+    )
+
+
 def color_stats_text(color_stats: DataFrame) -> str:
     """Reference get_color_stats_text (newsletter.py:18-55): first
     row's win rate, plus a second sentence from the same category's
     last row (no suffix) or the next category's first row (with an
     ' in <category>' suffix)."""
-    rows = color_stats.orderBy("time_control_category", "player_color").collect()
+    rows = _sorted_rows(color_stats, "time_control_category", "player_color")
     if not rows:
         return _EMPTY_COLOR_TEXT
     category = rows[0].time_control_category
@@ -102,7 +116,7 @@ def render_color_stats_svg(color_stats: DataFrame, width: int = 480, height: int
     """Stacked Win/Draw/Loss ratio bars per (category, color), each
     segment labeled with its percentage — the marks of
     make_color_stats_plot (plots.py:10-51)."""
-    rows = color_stats.orderBy("time_control_category", "player_color").collect()
+    rows = _sorted_rows(color_stats, "time_control_category", "player_color")
     pad, label_h = 40, 30
     plot_h = height - pad - label_h
     n = max(len(rows), 1)
@@ -143,7 +157,7 @@ def render_elo_by_weekday_svg(elo: DataFrame, width: int = 480, height: int = 32
     """Mean-elo line with a ±std band and min/max whiskers per
     weekday — the marks of make_elo_by_weekday_plot
     (plots.py:54-129)."""
-    rows = elo.orderBy("weekday_played").collect()
+    rows = _sorted_rows(elo, "weekday_played")
     pad = 40
     parts = [
         f'<svg xmlns="http://www.w3.org/2000/svg" width="{width}" height="{height}">',

@@ -328,18 +328,30 @@ def attach_opening_names(games: DataFrame, eco_codes: DataFrame) -> DataFrame:
 
 def get_color_stats(games: DataFrame) -> DataFrame:
     """Win-ratio pivot: (category, color) x result -> row-normalized
-    Win/Draw/Loss shares with 0-fill and fixed column order.
+    Win/Draw/Loss shares in fixed column order.
+
+    Each share is the group's distinct game_link count for that result
+    over the sum of the three, as countDistinct counts: a duplicated
+    link counts once, a NULL link never, and a link under two results
+    in both. Rows without a Win/Draw/Loss result or a link are dropped
+    before grouping (pandas pivot_table drops NaN keys the same way),
+    so no group has a zero total. One groupBy with a collect_set per
+    result plans a single exchange.
 
     Reference: get_color_stats (transforms.py:396-417).
     """
     results = ["Win", "Draw", "Loss"]
-    counts = (
-        games.groupBy("time_control_category", "player_color")
-        .pivot("player_result", results)
-        .agg(F.countDistinct("game_link"))
+    counted = games.filter(
+        F.col("player_result").isin(results) & F.col("game_link").isNotNull()
     )
-    filled = [F.coalesce(F.col(r), F.lit(0)).alias(r.lower()) for r in results]
-    counts = counts.select("time_control_category", "player_color", *filled)
+    counts = counted.groupBy("time_control_category", "player_color").agg(
+        *[
+            F.size(
+                F.collect_set(F.when(F.col("player_result") == r, F.col("game_link")))
+            ).alias(r.lower())
+            for r in results
+        ]
+    )
     total = sum(F.col(r.lower()) for r in results)
     return counts.select(
         "time_control_category",
@@ -351,6 +363,11 @@ def get_color_stats(games: DataFrame) -> DataFrame:
 def get_elo_by_weekday(games: DataFrame, category: str = "blitz") -> DataFrame:
     """Per-weekday elo mean/std/min/max for one time-control category,
     NaN std -> 0, sorted by weekday (Sunday-first recode 6->-1).
+
+    The partial aggregate runs on every scan partition; its at most 7
+    rows are then sorted by a single-partition local sort, which needs
+    no range exchange and no sampling job, so a collect runs the one
+    shuffle stage plus its result stage.
 
     Reference: get_elo_by_weekday (transforms.py:420-440).
     """
@@ -368,5 +385,6 @@ def get_elo_by_weekday(games: DataFrame, category: str = "blitz") -> DataFrame:
             F.min("player_elo").alias("min"),
             F.max("player_elo").alias("max"),
         )
-        .orderBy("weekday_played")
+        .coalesce(1)
+        .sortWithinPartitions("weekday_played")
     )

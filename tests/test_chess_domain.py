@@ -245,6 +245,26 @@ def test_color_stats_pivot(games):
     assert row.win == 0.5 and row.draw == 0.5 and row.loss == 0.0
 
 
+
+def test_color_stats_skips_groups_without_counted_games(spark):
+    # A PGN result of '*' leaves player_result NULL. A group holding only
+    # such games, or only NULL links, has no game to share out; it is
+    # dropped, as pandas pivot_table drops NaN keys, instead of dividing
+    # by a zero total.
+    games = spark.createDataFrame(
+        [
+            ("g1", "blitz", "white", "Win"),
+            ("g2", "blitz", "white", "Loss"),
+            ("g3", "bullet", "white", None),
+            ("g4", "bullet", "white", None),
+            (None, "rapid", "black", "Draw"),
+        ],
+        "game_link string, time_control_category string, player_color string,"
+        " player_result string",
+    )
+    rows = [tuple(r) for r in get_color_stats(games).collect()]
+    assert rows == [("blitz", "white", 0.5, 0.0, 0.5)]
+
 def test_elo_by_weekday(games):
     out = get_elo_by_weekday(games, "blitz").collect()
     # all fixture games are Monday 2024-01-29 -> pandas weekday 0;
