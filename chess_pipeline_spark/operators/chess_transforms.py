@@ -333,16 +333,19 @@ def get_color_stats(games: DataFrame) -> DataFrame:
     Each share is the group's distinct game_link count for that result
     over the sum of the three, as countDistinct counts: a duplicated
     link counts once, a NULL link never, and a link under two results
-    in both. Rows without a Win/Draw/Loss result or a link are dropped
-    before grouping (pandas pivot_table drops NaN keys the same way),
-    so no group has a zero total. One groupBy with a collect_set per
-    result plans a single exchange.
+    in both. Rows without a Win/Draw/Loss result, a link or a
+    category are dropped before grouping (pandas pivot_table drops NaN
+    keys the same way), so no group has a zero total or a NULL
+    category. One groupBy with a collect_set per result plans a single
+    exchange.
 
     Reference: get_color_stats (transforms.py:396-417).
     """
     results = ["Win", "Draw", "Loss"]
     counted = games.filter(
-        F.col("player_result").isin(results) & F.col("game_link").isNotNull()
+        F.col("player_result").isin(results)
+        & F.col("game_link").isNotNull()
+        & F.col("time_control_category").isNotNull()
     )
     counts = counted.groupBy("time_control_category", "player_color").agg(
         *[

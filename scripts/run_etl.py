@@ -63,6 +63,7 @@ def _load_json_records(path: str) -> list[dict]:
 
 
 def run_games(args: argparse.Namespace, spark=None) -> int:
+    from chess_pipeline_spark import commit
     from chess_pipeline_spark.parse import parse_pgn_dataframe
     from chess_pipeline_spark.pipeline import materialize, run_game_etl
     from chess_pipeline_spark.schemas import (
@@ -92,6 +93,11 @@ def run_games(args: argparse.Namespace, spark=None) -> int:
     # --out, a local-filesystem existence check would silently treat
     # the cache as absent and recompute every eval from scratch
     cache_path = os.path.join(args.out, "position_evals")
+    # a swap that crashed between its renames left the cache only in
+    # its .bak: put it back before the read, or this import loses every
+    # cached eval (a local-filesystem step, but the upserts below take
+    # local paths only anyway)
+    commit.recover(cache_path)
     try:
         cache = spark.read.parquet(cache_path)
     except AnalysisException:  # first run: no cache yet

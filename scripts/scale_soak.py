@@ -38,7 +38,9 @@ this scale; ratio ~ multiplier is linear data-bound scaling; ratio
 
 Writes SCALESOAK_r{N}.json at the repo root, prints one JSON line.
 Env: SOAK_DIR (default /tmp/scale_soak), SOAK_RUNS (default 2),
-SOAK_REBUILD=1 to force regeneration.
+SOAK_REBUILD=1 to force regeneration. The grown tables stay under
+$SOAK_DIR/sfx; scripts/ledger_soak.py --sf-dir $SOAK_DIR/sfx soaks the
+document ledgers on its 500k documents.
 """
 
 from __future__ import annotations
@@ -120,22 +122,6 @@ def _document_replica(d):
             r"'0123456789', 'abcdefghij')))"
         ),
     )
-
-
-def replicate_documents(
-    spark, src: str, out_dir: str, mult: int = _DOC_MULT
-) -> int:
-    """Write ONLY the replicated documents table under out_dir — for
-    soaks that need the doc corpus without paying for the relational
-    and embedding tiers (the spangram ledger stress)."""
-    os.makedirs(out_dir, exist_ok=True)
-    base = spark.read.parquet(f"{src}/documents.parquet")
-    reps = spark.range(mult).withColumnRenamed("id", "__rep")
-    df = _document_replica(base.crossJoin(F.broadcast(reps))).drop("__rep")
-    df.repartition(64).write.mode("overwrite").parquet(
-        f"{out_dir}/documents.parquet"
-    )
-    return spark.read.parquet(f"{out_dir}/documents.parquet").count()
 
 
 def _replicate(spark, src: str, out_dir: str) -> dict[str, int]:

@@ -91,7 +91,7 @@ def test_latest_scalesoak_provenance():
     )
 
 
-@pytest.mark.parametrize("stem", ["SPANGRAMSOAK", "DSIRSOAK"])
+@pytest.mark.parametrize("stem", ["SPANGRAMSOAK", "DSIRSOAK", "LEDGERSOAK"])
 def test_ledger_soak_provenance_if_committed(stem):
     found = _latest(re.compile(rf"^{stem}_r(\d+)\.json$"))
     if not found:

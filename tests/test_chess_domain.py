@@ -250,7 +250,7 @@ def test_color_stats_skips_groups_without_counted_games(spark):
     # A PGN result of '*' leaves player_result NULL. A group holding only
     # such games, or only NULL links, has no game to share out; it is
     # dropped, as pandas pivot_table drops NaN keys, instead of dividing
-    # by a zero total.
+    # by a zero total. A NULL category is such a key too.
     games = spark.createDataFrame(
         [
             ("g1", "blitz", "white", "Win"),
@@ -258,6 +258,7 @@ def test_color_stats_skips_groups_without_counted_games(spark):
             ("g3", "bullet", "white", None),
             ("g4", "bullet", "white", None),
             (None, "rapid", "black", "Draw"),
+            ("g5", None, "white", "Win"),
         ],
         "game_link string, time_control_category string, player_color string,"
         " player_result string",

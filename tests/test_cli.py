@@ -65,6 +65,49 @@ def test_cli_games_end_to_end(spark, tmp_path):
     assert spark.read.parquet(str(out / "game_moves")).count() == n_moves
 
 
+def test_cli_games_reads_a_cache_a_crashed_swap_left_in_bak(spark, tmp_path):
+    """A position_evals swap that crashed between its two renames leaves
+    the cache only in its .bak; the next import must read the cached
+    evals from it, as an import into the uncrashed warehouse does."""
+    import os
+    import re
+    import shutil
+
+    from chess_pipeline_spark.commit import BAK
+
+    def games(out, pgn, row):
+        (tmp_path / "g.pgn").write_text(pgn)
+        (tmp_path / "g.ndjson").write_text(json.dumps(row))
+        rc = run_etl.main(
+            [
+                "games", "--pgn", str(tmp_path / "g.pgn"),
+                "--json", str(tmp_path / "g.ndjson"),
+                "--player", "PlayerOne", "--out", str(out),
+            ],
+            spark=spark,
+        )
+        assert rc == 0
+
+    clean, crashed = tmp_path / "clean", tmp_path / "crashed"
+    games(clean, PGN_FULL, _json_row(id="abcd1234"))
+    shutil.copytree(clean, crashed)
+    os.rename(crashed / "position_evals", f"{crashed}/position_evals{BAK}")
+    # the same positions without evals: only the cache can score them
+    no_evals = re.sub(r"\[%eval [^]]*\] ", "", PGN_FULL).replace(
+        "abcd1234", "noev0001"
+    )
+    for out in (clean, crashed):
+        games(out, no_evals, _json_row(id="noev0001"))
+
+    assert not os.path.exists(f"{crashed}/position_evals{BAK}")
+    for table in ("position_evals", "win_probabilities"):
+        want, got = (
+            sorted(map(tuple, spark.read.parquet(str(out / table)).collect()))
+            for out in (clean, crashed)
+        )
+        assert got == want, table
+
+
 def test_cli_corpus_end_to_end(spark, sf_dir, tmp_path):
     out = tmp_path / "corpus"
     rc = run_etl.main(

@@ -163,7 +163,7 @@ def test_newsletter_end_to_end_from_operators(spark):
 # the report set over a games table: golden output and job shape
 # ---------------------------------------------------------------------------
 
-# A NULL category (ordered first), a duplicated link (counted once), a
+# A NULL category (dropped), a duplicated link (counted once), a
 # NULL link (counted in no share, but in the Elo stats), a link under
 # two results (counted in both), two categories over several weekdays,
 # and a category with no games.
@@ -188,10 +188,11 @@ _GAMES_SCHEMA = (
 _REPORT_CATEGORIES = ("bullet", "blitz", "rapid")
 
 # Captured from the report code that sorted with a Spark orderBy and
-# pivoted a countDistinct.
+# pivoted a countDistinct; the colour-stats sentence and bars were
+# re-captured once rows with a NULL category were dropped.
 _GOLDEN_TEXTS = [
     (
-        'You had a 0.00% win rate with white in None and a 33.33% win rate with black in blitz. <br>'
+        'You had a 33.33% win rate with black in blitz and a 50.00% win rate with white. <br>'
         " <img alt='Win rate by color played' src='cid:win-by-color'><br>"
     ),
     '\n',
@@ -209,36 +210,31 @@ _GOLDEN_SVGS = [
     (
         '<svg xmlns="http://www.w3.org/2000/svg" width="480" height="320">'
         '<text x="240.0" y="20" text-anchor="middle" font-size="14">Win-loss ratio by color played</text>'
-        '<rect x="56.0" y="40.0" width="48.0" height="0.0" fill="#2ca02c"/>'
-        '<rect x="56.0" y="40.0" width="48.0" height="250.0" fill="#ffbf00"/>'
-        '<text x="80.0" y="165.0" text-anchor="middle" font-size="10">100.00%</text>'
-        '<rect x="56.0" y="290.0" width="48.0" height="0.0" fill="#d62728"/>'
-        '<text x="80.0" y="312" text-anchor="middle" font-size="10">None/white</text>'
-        '<rect x="136.0" y="40.0" width="48.0" height="83.3" fill="#2ca02c"/>'
-        '<text x="160.0" y="81.7" text-anchor="middle" font-size="10">33.33%</text>'
-        '<rect x="136.0" y="123.3" width="48.0" height="83.3" fill="#ffbf00"/>'
-        '<text x="160.0" y="165.0" text-anchor="middle" font-size="10">33.33%</text>'
-        '<rect x="136.0" y="206.7" width="48.0" height="83.3" fill="#d62728"/>'
-        '<text x="160.0" y="248.3" text-anchor="middle" font-size="10">33.33%</text>'
-        '<text x="160.0" y="312" text-anchor="middle" font-size="10">blitz/black</text>'
-        '<rect x="216.0" y="40.0" width="48.0" height="125.0" fill="#2ca02c"/>'
-        '<text x="240.0" y="102.5" text-anchor="middle" font-size="10">50.00%</text>'
-        '<rect x="216.0" y="165.0" width="48.0" height="125.0" fill="#ffbf00"/>'
-        '<text x="240.0" y="227.5" text-anchor="middle" font-size="10">50.00%</text>'
-        '<rect x="216.0" y="290.0" width="48.0" height="0.0" fill="#d62728"/>'
-        '<text x="240.0" y="312" text-anchor="middle" font-size="10">blitz/white</text>'
-        '<rect x="296.0" y="40.0" width="48.0" height="250.0" fill="#2ca02c"/>'
-        '<text x="320.0" y="165.0" text-anchor="middle" font-size="10">100.00%</text>'
-        '<rect x="296.0" y="290.0" width="48.0" height="0.0" fill="#ffbf00"/>'
-        '<rect x="296.0" y="290.0" width="48.0" height="0.0" fill="#d62728"/>'
-        '<text x="320.0" y="312" text-anchor="middle" font-size="10">rapid/black</text>'
-        '<rect x="376.0" y="40.0" width="48.0" height="83.3" fill="#2ca02c"/>'
-        '<text x="400.0" y="81.7" text-anchor="middle" font-size="10">33.33%</text>'
-        '<rect x="376.0" y="123.3" width="48.0" height="83.3" fill="#ffbf00"/>'
-        '<text x="400.0" y="165.0" text-anchor="middle" font-size="10">33.33%</text>'
-        '<rect x="376.0" y="206.7" width="48.0" height="83.3" fill="#d62728"/>'
-        '<text x="400.0" y="248.3" text-anchor="middle" font-size="10">33.33%</text>'
-        '<text x="400.0" y="312" text-anchor="middle" font-size="10">rapid/white</text>'
+        '<rect x="60.0" y="40.0" width="60.0" height="83.3" fill="#2ca02c"/>'
+        '<text x="90.0" y="81.7" text-anchor="middle" font-size="10">33.33%</text>'
+        '<rect x="60.0" y="123.3" width="60.0" height="83.3" fill="#ffbf00"/>'
+        '<text x="90.0" y="165.0" text-anchor="middle" font-size="10">33.33%</text>'
+        '<rect x="60.0" y="206.7" width="60.0" height="83.3" fill="#d62728"/>'
+        '<text x="90.0" y="248.3" text-anchor="middle" font-size="10">33.33%</text>'
+        '<text x="90.0" y="312" text-anchor="middle" font-size="10">blitz/black</text>'
+        '<rect x="160.0" y="40.0" width="60.0" height="125.0" fill="#2ca02c"/>'
+        '<text x="190.0" y="102.5" text-anchor="middle" font-size="10">50.00%</text>'
+        '<rect x="160.0" y="165.0" width="60.0" height="125.0" fill="#ffbf00"/>'
+        '<text x="190.0" y="227.5" text-anchor="middle" font-size="10">50.00%</text>'
+        '<rect x="160.0" y="290.0" width="60.0" height="0.0" fill="#d62728"/>'
+        '<text x="190.0" y="312" text-anchor="middle" font-size="10">blitz/white</text>'
+        '<rect x="260.0" y="40.0" width="60.0" height="250.0" fill="#2ca02c"/>'
+        '<text x="290.0" y="165.0" text-anchor="middle" font-size="10">100.00%</text>'
+        '<rect x="260.0" y="290.0" width="60.0" height="0.0" fill="#ffbf00"/>'
+        '<rect x="260.0" y="290.0" width="60.0" height="0.0" fill="#d62728"/>'
+        '<text x="290.0" y="312" text-anchor="middle" font-size="10">rapid/black</text>'
+        '<rect x="360.0" y="40.0" width="60.0" height="83.3" fill="#2ca02c"/>'
+        '<text x="390.0" y="81.7" text-anchor="middle" font-size="10">33.33%</text>'
+        '<rect x="360.0" y="123.3" width="60.0" height="83.3" fill="#ffbf00"/>'
+        '<text x="390.0" y="165.0" text-anchor="middle" font-size="10">33.33%</text>'
+        '<rect x="360.0" y="206.7" width="60.0" height="83.3" fill="#d62728"/>'
+        '<text x="390.0" y="248.3" text-anchor="middle" font-size="10">33.33%</text>'
+        '<text x="390.0" y="312" text-anchor="middle" font-size="10">rapid/white</text>'
         '</svg>'
     ),
     (
@@ -283,7 +279,7 @@ _GOLDEN_LETTER = {
         '<html><body> Hi TestPlayer,<br>'
         '<br>'
         "This week you played chess! Here's your performance:<br>"
-        'You had a 0.00% win rate with white in None and a 33.33% win rate with black in blitz. <br>'
+        'You had a 33.33% win rate with black in blitz and a 50.00% win rate with white. <br>'
         " <img alt='Win rate by color played' src='cid:win-by-color'><br>"
         '<br>'
         '\n'
@@ -300,7 +296,7 @@ _GOLDEN_LETTER = {
         ' Hi TestPlayer,\n'
         '\n'
         "This week you played chess! Here's your performance:\n"
-        'You had a 0.00% win rate with white in None and a 33.33% win rate with black in blitz. \n'
+        'You had a 33.33% win rate with black in blitz and a 50.00% win rate with white. \n'
         ' \n'
         '\n'
         '\n'

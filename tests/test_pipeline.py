@@ -8,7 +8,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from chess_pipeline_spark.pipeline import TABLE_KEYS, materialize, run_game_etl
-from chess_pipeline_spark.schemas import POSITION_EVALS, RAW_JSON, RAW_PGN
+from chess_pipeline_spark.schemas import (
+    GAME_CLOCKS,
+    GAME_MATERIALS,
+    GAME_MOVES,
+    GAME_POSITIONS,
+    POSITION_EVALS,
+    RAW_JSON,
+    RAW_PGN,
+    WIN_PROBABILITIES,
+)
 from chess_pipeline_spark.sinks import anti_join_delete
 from tests.test_chess_domain import PLAYER, _json_row, _pgn_row
 
@@ -79,6 +88,20 @@ def test_full_etl_materialize_roundtrip(spark, tmp_path):
         got = spark.read.parquet(f"{base}/{name}")
         assert got.count() == df.count(), name
         assert set(got.columns) == set(df.columns), name
+    # the declared data model: names, order and types as written
+    declared = {
+        "game_moves": GAME_MOVES,
+        "game_clocks": GAME_CLOCKS,
+        "game_positions": GAME_POSITIONS,
+        "game_materials": GAME_MATERIALS,
+        "position_evals": POSITION_EVALS,
+        "win_probabilities": WIN_PROBABILITIES,
+    }
+    for name, schema in declared.items():
+        got = spark.read.parquet(f"{base}/{name}").schema
+        assert [(f.name, f.dataType) for f in got] == [
+            (f.name, f.dataType) for f in schema
+        ], name
 
 
 def test_materialize_concurrent_matches_sequential_reference(spark, tmp_path, monkeypatch):
