@@ -188,8 +188,15 @@ def build_ivf_index(
     # sequentially; a 3-thread pool overlaps them so the later jobs'
     # tasks back-fill the scheduler while the first one's tail
     # finishes. Same frames, same checkpointed contents, so the index
-    # bytes are unchanged (numpy-parity + oracle tests).
+    # bytes are unchanged (numpy-parity + oracle tests). Each
+    # submitted callable is wrapped on its own, so its thread carries
+    # a private copy of the caller's job group and local properties.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    def inherit(fn):
+        return inheritable_thread_target(corpus.sparkSession)(fn)
 
     def _mk_seeds():
         return (
@@ -228,9 +235,9 @@ def build_ivf_index(
         return row["d"]
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_seeds = pool.submit(_mk_seeds)
-        f_codebook = pool.submit(_mk_codebook)
-        f_dim = pool.submit(_probe_dim)
+        f_seeds = pool.submit(inherit(_mk_seeds))
+        f_codebook = pool.submit(inherit(_mk_codebook))
+        f_dim = pool.submit(inherit(_probe_dim))
         seeds = f_seeds.result()
         codebook = f_codebook.result()
         dim = f_dim.result()
@@ -284,20 +291,28 @@ def build_ivf_index(
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = [
             pool.submit(
-                lambda: _encode_rows(assigned, codebook, dim // _PQ_M, id_col, dim=dim)
-                .hint("rebalance", "list_id")
-                .write.partitionBy("list_id")
-                .mode("overwrite")
-                .parquet(os.path.join(out_path, "lists"))
-            ),
-            pool.submit(
-                lambda: seeds.write.mode("overwrite").parquet(
-                    os.path.join(out_path, "centroids")
+                inherit(
+                    lambda: _encode_rows(
+                        assigned, codebook, dim // _PQ_M, id_col, dim=dim
+                    )
+                    .hint("rebalance", "list_id")
+                    .write.partitionBy("list_id")
+                    .mode("overwrite")
+                    .parquet(os.path.join(out_path, "lists"))
                 )
             ),
             pool.submit(
-                lambda: codebook.write.mode("overwrite").parquet(
-                    os.path.join(out_path, "pq_codebook")
+                inherit(
+                    lambda: seeds.write.mode("overwrite").parquet(
+                        os.path.join(out_path, "centroids")
+                    )
+                )
+            ),
+            pool.submit(
+                inherit(
+                    lambda: codebook.write.mode("overwrite").parquet(
+                        os.path.join(out_path, "pq_codebook")
+                    )
                 )
             ),
         ]

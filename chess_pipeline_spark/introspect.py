@@ -129,26 +129,6 @@ def skew_rescue_audit(df: DataFrame) -> list[dict]:
     return audits
 
 
-def assert_joins_skew_protected(df: DataFrame, allow_unsplittable: int = 0) -> list[dict]:
-    """Plan gate: every SortMergeJoin in df's plan must be
-    AQE-skew-splittable, except `allow_unsplittable` joins the caller
-    has made skew-free STRUCTURALLY (broadcast hot keys, bounded df —
-    cite the mechanism at the call site). Raises AssertionError with
-    the offending shapes otherwise; returns the audit for further
-    assertions."""
-    audit = skew_rescue_audit(df)
-    bad = [a for a in audit if not a["aqe_splittable"]]
-    if len(bad) > allow_unsplittable:
-        raise AssertionError(
-            f"{len(bad)} SortMergeJoin(s) AQE cannot skew-split (allowed "
-            f"{allow_unsplittable}): {bad} — broadcast the skewed side, "
-            "salt, or pre-split hot keys; AQE will NOT rescue these shapes "
-            "(OptimizeSkewedJoin matches only Sort-over-ENSURE_REQUIREMENTS-"
-            "shuffle on both children)."
-        )
-    return audit
-
-
 def plan_metrics(df: DataFrame) -> dict:
     """Counts of the plan features that matter at scale. Keys:
 

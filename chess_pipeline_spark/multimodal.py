@@ -146,44 +146,6 @@ def _check_decodable(kind: str) -> None:
         )
 
 
-def resize_payload(media: DataFrame, target_bytes: int = 64) -> DataFrame:
-    """Resize stage: payload -> fixed-size payload, schema preserved
-    (MEDIA_SCHEMA in, MEDIA_SCHEMA out) so stages chain. The fake
-    path nearest-neighbor-resamples the byte buffer to exactly
-    target_bytes (out[i] = in[(i*n)//target]) — the dimensional
-    analog of an image resize; a real PIL resize plugs into the same
-    branch. Empty payloads stay empty (nothing to sample)."""
-    import numpy as np
-    import pandas as pd
-
-    from chess_pipeline_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(media.sparkSession)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "kind": [], "payload": [], "meta": []}
-            for doc_id, kind, payload, meta in zip(
-                pdf["doc_id"], pdf["kind"], pdf["payload"], pdf["meta"]
-            ):
-                if payload is None:
-                    continue
-                _check_decodable(kind)
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                if len(arr):
-                    idx = (np.arange(target_bytes, dtype=np.int64) * len(arr)) // target_bytes
-                    resized = arr[idx].tobytes()
-                else:
-                    resized = b""
-                out["doc_id"].append(doc_id)
-                out["kind"].append(kind)
-                out["payload"].append(resized)
-                out["meta"].append({"n_bytes": len(resized), "mime": meta["mime"]})
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, MEDIA_SCHEMA)
-
-
 def sample_frames(
     media: DataFrame, frame_bytes: int = 32, every_n: int = 2
 ) -> DataFrame:

@@ -315,17 +315,6 @@ def explode_evals(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def attach_opening_names(games: DataFrame, eco_codes: DataFrame) -> DataFrame:
-    """Broadcast the eco_codes dimension (CSV-seeded, S6 —
-    db/assorted_sql/copy_eco_codes.sql) onto the games fact by ECO
-    code; unknown codes keep the game row with a NULL opening_name
-    (left join — the dimension is static and tiny)."""
-    dim = eco_codes.select(
-        F.col("eco_code").alias("opening_played"), "opening_name"
-    )
-    return games.join(F.broadcast(dim), "opening_played", "left")
-
-
 def get_color_stats(games: DataFrame) -> DataFrame:
     """Win-ratio pivot: (category, color) x result -> row-normalized
     Win/Draw/Loss shares in fixed column order.

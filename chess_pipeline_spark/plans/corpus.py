@@ -251,35 +251,29 @@ def temperature_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     in pass 2; the rollup shuffles ≤ |sources| keys. No corpus-scale
     exchange anywhere.
 
-    r14 (guide §2.4): the ≤|sources|-row sizes frame is pinned — the
-    rates frame is consumed twice (kept filter + final report join)
-    and tot once more, and each consumption re-ran the pass-1 corpus
-    aggregation through its lineage (5 document scans -> 2,
-    plans/r14/temperature_mixture_sample_{before,after}.txt). All
-    rate arithmetic (the float pow/sum ordering included) is
-    untouched — the pin only stops the re-evaluation. Interleaved
-    A/B min-of-6 at sf0.1: 0.80x min / 0.77x median, rows identical.
+    The corpus totals (Σw, Σn) are window sums over the one sizes
+    frame, so both consumers of the rates frame (kept filter + final
+    report join) plan the same broadcast, which AQE runs once and
+    reuses: the pass-1 aggregation runs once. No pin: a
+    localCheckpoint over a shuffled frame runs its shuffle stage when
+    the plan is built, even with eager=False. Against the r14 sizes
+    pin, 10 interleaved pairs at sf0.1 on local[4]: min 0.542 s vs
+    0.582 s, median 0.661 s vs 0.735 s, rows identical.
     """
     d = spread(_L(spark, sf_dir, "documents"), "doc_id")
-    sizes = (
-        d.groupBy("source")
-        .agg(F.count("*").cast("long").alias("n_s"))
-        .localCheckpoint()
-    )
+    sizes = d.groupBy("source").agg(F.count("*").cast("long").alias("n_s"))
     w = F.pow(F.col("n_s").cast("double"), F.lit(_TEMP_ALPHA))
-    tot = sizes.agg(
-        F.sum(w).alias("sum_w"), F.sum("n_s").cast("long").alias("n_corpus")
-    )
-    rates = sizes.crossJoin(F.broadcast(tot)).select(
+    all_sources = Window.partitionBy()  # ≤ |sources| rows, one window
+    rates = sizes.select(
         "source",
         "n_s",
         F.least(
             F.lit(1000),
             F.floor(
                 F.lit(_TEMP_BUDGET_PERMILLE / 1000.0)
-                * F.col("n_corpus")
+                * F.sum("n_s").over(all_sources)
                 * w
-                / F.col("sum_w")
+                / F.sum(w).over(all_sources)
                 / F.col("n_s")
                 * 1000.0
                 + F.lit(0.5)
@@ -1854,21 +1848,21 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap); scoring joins words against the broadcast LM and rolls up
     once on doc_id.
 
-    r14 (guide §2.4, the hll_cumulative pin precedent): the train
-    word-count frame is pinned (vocab-bounded — top-K-capped at real
-    scale) and scal derives FROM it (n_train = Σc, v_train = row
-    count — identical longs by construction), so the corpus explode
-    runs ONCE for the model instead of three times (scal, lm, and
-    oov each re-ran it: 4 document scans -> 2 in the plan,
-    plans/r14/unigram_logprob_score_{before,after}.txt). Interleaved
-    A/B min-of-6 at sf0.1: 0.78x min / 0.77x median, rows identical.
+    scal derives FROM the train word-count frame (n_train = Σc,
+    v_train = row count — identical longs by construction), so scal,
+    lm and oov plan the same word-count shuffle, which AQE runs once
+    and reuses: the corpus explode runs once for the model. No pin: a
+    localCheckpoint over a shuffled frame runs its shuffle stage when
+    the plan is built, even with eager=False. Against the r14
+    word-count pin, 10 interleaved pairs at sf0.1 on local[4]: min
+    0.389 s vs 0.423 s, median 0.486 s vs 0.509 s, rows identical.
     """
     d = spread(_L(spark, sf_dir, "documents"), "doc_id").select("doc_id", "text")
     tokens = d.filter(F.col("text").isNotNull()).select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     )
     train = tokens.filter(F.col("doc_id") % 2 == 0)
-    cn = train.groupBy("word").agg(F.count("*").alias("c")).localCheckpoint()
+    cn = train.groupBy("word").agg(F.count("*").alias("c"))
     scal = cn.agg(
         F.sum("c").alias("n_train"),
         F.count("*").alias("v_train"),
@@ -3053,7 +3047,7 @@ def word_gram_postings(docs: DataFrame) -> DataFrame:
     """Distinct per-doc word {_DUPGRAM_N}-gram postings
     (doc_id, source, g) — the one tokenize rule shared by the batch
     dup_ngram_fraction and the streaming dup-gram ledger
-    (streaming/jobs.py::stream_dupgram_ledger), so incremental df
+    (streaming/jobs.py::ingest_dupgram_delta), so incremental df
     counts and the batch recompute can never diverge on
     tokenization. Docs with fewer than {_DUPGRAM_N} words produce no
     postings."""

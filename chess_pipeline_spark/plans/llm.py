@@ -3524,16 +3524,20 @@ def ivf_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # upsert_partition_overwrite sets dynamic overwrite per-writer
     # (not via a racy session-conf toggle) and each batch rewrites
     # only its own partitions; the audit result is batch-order-free.
+    # Each thread inherits its own copy of the caller's job group.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [
             pool.submit(
-                ingest_ivf_batch, e.filter(F.col("vec_id") % 4 == 1), 0, idx
-            ),
-            pool.submit(
-                ingest_ivf_batch, e.filter(F.col("vec_id") % 4 == 3), 1, idx
-            ),
+                inheritable_thread_target(spark)(ingest_ivf_batch),
+                e.filter(F.col("vec_id") % 4 == r),
+                batch,
+                idx,
+            )
+            for batch, r in enumerate((1, 3))
         ]
         for f in futs:
             f.result()

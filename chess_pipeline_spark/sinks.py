@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from dataclasses import dataclass
 from functools import reduce
 
@@ -515,88 +514,3 @@ def verify_manifest(df: DataFrame, manifest_path: str, keys: list[str]) -> DataF
             )
         )
     )
-
-
-def repair_partitions(
-    source: DataFrame, target_path: str, manifest_path: str, keys: list[str]
-) -> list:
-    """Anti-entropy repair driven by the reproducibility manifest:
-    verify the partitioned target against its stored manifest and
-    rewrite ONLY the partitions whose (n_rows, content_hash)
-    disagree, pulling the correct rows from `source`. Healthy
-    partitions' files are never touched (dynamic partition
-    overwrite), so fixing one corrupt partition of a 100 TB dataset
-    costs one partition's write, not a full rewrite.
-
-    Returns the repaired key tuples (empty = target was healthy).
-    The source must hold the authoritative rows for the repaired
-    keys; re-running after a repair verifies clean and rewrites
-    nothing. Orphans — bad keys the MANIFEST does not list at all
-    (extra/corrupt partitions that shouldn't exist; dynamic partition
-    overwrite can't touch a partition absent from the written frame)
-    — have their target partition directories deleted outright, so
-    the repair loop converges for them too. Classification is by
-    manifest absence, never by source emptiness: a manifest-listed
-    key with no source rows means the caller handed us a stale or
-    filtered source, and deleting data on that evidence would be
-    irreversible — we raise instead. All key tuples are compared
-    after casting to the SOURCE key schema (the verify join infers
-    partition-column types from the target directory names, which
-    can disagree, e.g. int-inferred vs string).
-    """
-    from pyspark.sql import functions as F
-
-    spark = source.sparkSession
-    key_schema = source.select(*keys).schema
-    bad = (
-        verify_manifest(spark.read.parquet(target_path), manifest_path, keys)
-        .select(
-            *[
-                F.col(c).cast(f.dataType).alias(c)
-                for c, f in zip(keys, key_schema.fields)
-            ],
-            F.col("want_rows").isNull().alias("_orphan"),
-        )
-        .collect()
-    )
-    if not bad:
-        return []
-    bad_keys = [tuple(r)[: len(keys)] for r in bad]
-    orphans = [k for k, r in zip(bad_keys, bad) if r["_orphan"]]
-    repairable = [k for k, r in zip(bad_keys, bad) if not r["_orphan"]]
-    if repairable:
-        bad_df = spark.createDataFrame([list(k) for k in repairable], key_schema)
-        fix = source.join(F.broadcast(bad_df), keys, "left_semi")
-        covered = {
-            tuple(r) for r in fix.select(*keys).distinct().collect()
-        }  # driver-side tiny: bounded by the bad-key count
-        missing = [k for k in repairable if k not in covered]
-        if missing:
-            raise ValueError(
-                "repair_partitions: manifest lists keys the source has no "
-                f"rows for ({missing}); refusing to delete manifest-covered "
-                "partitions — pass the authoritative, unfiltered source"
-            )
-        upsert_partition_overwrite(fix, target_path, keys)
-    for k in orphans:
-        # hive layout: target/key1=v1/key2=v2. Match directory names
-        # by UNESCAPING what Spark wrote (it percent-encodes special
-        # chars; None becomes the Hive default-partition name) rather
-        # than re-deriving the escaped form — a raw f"{col}={val}"
-        # path misses any escaped value and the orphan would survive.
-        from urllib.parse import unquote
-
-        level = target_path
-        for c, v in zip(keys, k):
-            want = "__HIVE_DEFAULT_PARTITION__" if v is None else str(v)
-            nxt = None
-            for d in os.listdir(level):
-                if d.startswith(f"{c}=") and unquote(d[len(c) + 1 :]) == want:
-                    nxt = os.path.join(level, d)
-                    break
-            if nxt is None:
-                break
-            level = nxt
-        else:
-            shutil.rmtree(level, ignore_errors=True)
-    return bad_keys

@@ -97,28 +97,6 @@ def stream_tumbling_counts(events: DataFrame, watermark: str = "2 hours") -> Dat
     )
 
 
-def stream_sliding_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Sliding 1h/30m window x event_type — the streaming twin of
-    plans/timeseries.events_sliding_1h_30m (each event lands in two
-    overlapping windows)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            # integer-cent fold like the batch twins: a streaming sum
-            # must not depend on micro-batch arrival order either
-            (F.sum(grid_cents("value", 2)) / F.lit(100.0)).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
 def stream_session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Native session_window sessionization (the streaming-stateful
     twin of plans/timeseries.events_sessionized)."""
@@ -149,67 +127,6 @@ def stream_dedup_latest(events: DataFrame) -> DataFrame:
     return events.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["user_id", "event_type", "event_id"]
     )
-
-
-def stream_interval_join(events: DataFrame, interval_s: int = 600) -> DataFrame:
-    """Stream-stream event-time range join: each purchase paired with
-    the same user's error events from the preceding `interval_s`
-    seconds — the streaming twin of
-    plans/timeseries.events_interval_join.
-
-    Uses Spark's native interval join: both branches carry a
-    watermark and the join condition bounds event time on both sides,
-    so each side's join state is evicted once the other side's
-    watermark passes the range (state is O(watermark window), not
-    O(stream)). The batch twin re-expresses the same range predicate
-    as a bin-bucketed equi-join because batch has no watermark to
-    bound a nested-loop — two mode-appropriate plans for one logical
-    spec.
-    """
-    # second-truncate the event time BEFORE the join so the range
-    # semantics match the batch twin exactly (events_interval_join
-    # compares integer ts_sec); µs-precision timestamps would
-    # otherwise flip pairs at the window boundary between the twins.
-    # Truncation happens on the watermark column itself, so the
-    # interval join's state cleanup still applies.
-    p = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_event_id"),
-            F.col("user_id").alias("p_user"),
-            F.date_trunc("second", F.col("ts")).alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    e = (
-        events.filter(F.col("event_type") == "error")
-        .select(
-            F.col("user_id").alias("e_user"),
-            F.date_trunc("second", F.col("ts")).alias("e_ts"),
-        )
-        .withWatermark("e_ts", "2 hours")
-    )
-    return p.join(
-        e,
-        F.expr(
-            f"p_user = e_user AND e_ts >= p_ts - INTERVAL {interval_s} SECONDS "
-            f"AND e_ts < p_ts"
-        ),
-        "inner",
-    ).select(
-        "p_event_id",
-        F.col("p_user").alias("user_id"),
-        F.unix_timestamp("p_ts").alias("p_ts_sec"),
-        F.unix_timestamp("e_ts").alias("err_ts_sec"),
-    )
-
-
-def stream_static_enrich(events: DataFrame, user_dim: DataFrame) -> DataFrame:
-    """Stream-static join: enrich the event stream with a static
-    (batch) user dimension — the canonical streaming-enrichment
-    pattern. The static side is re-read per micro-batch by Spark and
-    broadcast when small; no state is kept for the join itself."""
-    return events.join(F.broadcast(user_dim), "user_id", "left")
 
 
 def stream_upsert_foreach_batch(
@@ -1133,25 +1050,6 @@ def _split_ledger_process_batch(
     upsert_partition_overwrite(assignments, assignments_path, ["batch_id"])
 
 
-def stream_text_index_ingest(docs: DataFrame, index_path: str):
-    """Continuous inverted-index maintenance: every micro-batch of
-    documents folds into the persisted BM25 index through
-    text_index.ingest_text_delta, whose (batch_id, bucket)-partition
-    overwrite makes an at-least-once replayed batch rewrite identical
-    bytes — exactly-once by layout, the Count-Min ledger discipline
-    applied to a serving index. probe_bm25 over the streamed index
-    equals the batch build over the same documents bit-for-bit
-    (pytest). Per batch: one tokenize pass + one map-side-combined
-    (term, doc) shuffle + the partition write; no global state is
-    rewritten (stats are per-batch rows summed at probe time)."""
-    from chess_pipeline_spark.text_index import ingest_text_delta
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        ingest_text_delta(batch, index_path, batch_id)
-
-    return docs.writeStream.foreachBatch(_process)
-
-
 # ------------------------------------------------------------------
 # Streaming dup-gram ledger: incremental duplication-exposure df
 # ------------------------------------------------------------------
@@ -1185,20 +1083,6 @@ def ingest_dupgram_delta(
     )
 
 
-def stream_dupgram_ledger(docs: DataFrame, ledger_dir: str):
-    """Continuous duplication-exposure maintenance: each micro-batch
-    of documents folds its per-batch gram document frequencies into
-    the ledger (ingest_dupgram_delta). dup_exposure_from_ledger over
-    the streamed ledger equals the batch dup_ngram_fraction over the
-    same documents byte-for-byte (pytest law, duplicate delivery
-    included)."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        ingest_dupgram_delta(batch, ledger_dir, batch_id)
-
-    return docs.writeStream.foreachBatch(_process)
-
-
 def ingest_spangram_delta(
     batch: DataFrame, ledger_dir: str, batch_id: int
 ) -> None:
@@ -1227,19 +1111,6 @@ def ingest_spangram_delta(
     ADDITIVE_LEDGERS["spangram"].ingest(
         delta, ledger_dir, batch_id, "ingest_spangram_delta"
     )
-
-
-def stream_spangram_ledger(docs: DataFrame, ledger_dir: str):
-    """Continuous ExactSubstr planning-state maintenance: each
-    micro-batch folds its positional-gram occurrence counts into the
-    ledger. spans_from_ledger over the streamed ledger equals the
-    batch exact_substring_spans over the same documents byte-for-byte
-    (pytest law, duplicate delivery included)."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        ingest_spangram_delta(batch, ledger_dir, batch_id)
-
-    return docs.writeStream.foreachBatch(_process)
 
 
 def spans_from_ledger(spark, ledger_dir: str, docs: DataFrame) -> DataFrame:
@@ -1343,20 +1214,6 @@ def ingest_dsir_delta(
         .withColumn("batch_id", F.lit(batch_id))
     )
     ADDITIVE_LEDGERS["dsir"].ingest(delta, ledger_dir, batch_id, "ingest_dsir_delta")
-
-
-def stream_dsir_ledger(docs: DataFrame, ledger_dir: str, target_source: str):
-    """Continuous DSIR model maintenance: each micro-batch folds its
-    hashed-ngram bucket counts into the ledger.
-    dsir_from_ledger over the streamed ledger equals the batch
-    dsir_importance_weights over the same documents byte-for-byte
-    when the pinned target equals the corpus min(source) (pytest
-    law, duplicate delivery included)."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        ingest_dsir_delta(batch, ledger_dir, batch_id, target_source)
-
-    return docs.writeStream.foreachBatch(_process)
 
 
 def dsir_from_ledger(spark, ledger_dir: str, docs: DataFrame) -> DataFrame:

@@ -172,7 +172,7 @@ def stream_rolling_zscore(events: DataFrame) -> DataFrame:
     (ts_sec, event_id) order; cross-batch correctness assumes
     time-ordered arrival (the file-replay case) — out-of-order
     arrivals beyond that need event-time timers
-    (transformWithStateInPandas, gated in streaming/tws.py).
+    (transformWithStateInPandas, which needs google.protobuf).
     """
     from chess_pipeline_spark.deploy import ensure_package_on_executors
 

@@ -840,3 +840,24 @@ def test_ivf_major_rewrite_consolidates_without_a_delta(
         ingest_ivf_batch(corpus.filter(F.col("vec_id") <= 3), 3, idx)
     got = sorted(map(tuple, probe_ivf_adc(spark, idx, queries, k=5).collect()))
     assert got == want
+
+
+def test_ivf_pools_keep_the_callers_job_group(spark, sf_dir, tmp_path):
+    """build_ivf_index and the ivf_ingest_audit catalog query run jobs
+    from driver thread pools; every one of those jobs must carry the
+    caller's job group, so the caller can attribute and cancel it."""
+    from chess_pipeline_spark.plans.llm import ivf_ingest_audit
+
+    corpus = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("ivf-pools", "ivf build and ingest pools")
+    try:
+        build_ivf_index(corpus, str(tmp_path / "ivf"), n_lists=_N_LISTS)
+        ivf_ingest_audit(spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert len(tracker.getJobIdsForGroup("ivf-pools")) >= 6

@@ -278,19 +278,6 @@ def test_elo_by_weekday(games):
     assert r.std > 0.0
 
 
-def test_attach_opening_names(games, spark):
-    from chess_pipeline_spark.operators.chess_transforms import attach_opening_names
-
-    eco = spark.createDataFrame(
-        [("B30", "Sicilian Defense, Old Sicilian"), ("A00", "Irregular")],
-        "eco_code string, opening_name string",
-    )
-    out = attach_opening_names(games, eco)
-    assert out.count() == games.count()  # left join keeps all games
-    named = {r["game_link"]: r["opening_name"] for r in out.collect()}
-    assert all(v == "Sicilian Defense, Old Sicilian" for v in named.values())
-
-
 def test_normalize_to_schema(spark):
     from pyspark.sql import types as T
 

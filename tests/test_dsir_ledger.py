@@ -15,7 +15,6 @@ from chess_pipeline_spark.streaming.jobs import (
     ADDITIVE_LEDGERS,
     dsir_from_ledger,
     ingest_dsir_delta,
-    stream_dsir_ledger,
 )
 
 
@@ -50,7 +49,9 @@ def test_dsir_ledger_stream_equals_batch(spark, sf_dir, tmp_path):
     )
     led = str(tmp_path / "dsir_ledger")
     q = (
-        stream_dsir_ledger(stream, led, target)
+        stream.writeStream.foreachBatch(
+            lambda b, i: ingest_dsir_delta(b, led, i, target)
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()

@@ -17,7 +17,6 @@ from chess_pipeline_spark.multimodal import (
     attach_binary_payload,
     extract_media_features,
     frame_features,
-    resize_payload,
     sample_frames,
 )
 from chess_pipeline_spark.sources import load_table
@@ -46,22 +45,6 @@ def test_extract_media_features_matches_local_decode(spark, sf_dir):
         assert r["checksum"] == checksum
         assert r["n_bytes"] == len(local[r["doc_id"]])
         assert [round(x, 9) for x in r["feature_vec"]] == [round(x, 9) for x in vec]
-
-
-def test_resize_payload_exact_bytes(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    media = attach_binary_payload(docs)
-    local = {r["doc_id"]: bytes(r["payload"]) for r in media.collect()}
-    for r in resize_payload(media, target_bytes=16).collect():
-        src = local[r["doc_id"]]
-        got = bytes(r["payload"])
-        if not src:
-            assert got == b""
-            continue
-        # nearest-neighbor law: out[i] = in[(i*n)//target]
-        assert got == bytes(src[(i * len(src)) // 16] for i in range(16))
-        assert r["meta"]["n_bytes"] == 16
-        assert r["meta"]["mime"] == "text/plain"
 
 
 def test_sample_frames_chunks_and_stride(spark, sf_dir):
@@ -96,7 +79,7 @@ def test_frame_features_equal_sample_then_decode(spark, sf_dir):
 def test_frame_stages_unsupported_kind_raises(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(1)
     media = attach_binary_payload(docs, kind="video")
-    for stage in (resize_payload, sample_frames, frame_features):
+    for stage in (sample_frames, frame_features):
         with pytest.raises(Exception) as ei:
             stage(media).collect()
         assert "NotImplementedError" in str(ei.value) or isinstance(

@@ -178,7 +178,6 @@ def test_dupgram_ledger_stream_equals_batch(spark, sf_dir, tmp_path):
     from chess_pipeline_spark.streaming.jobs import (
         dup_exposure_from_ledger,
         ingest_dupgram_delta,
-        stream_dupgram_ledger,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -200,7 +199,9 @@ def test_dupgram_ledger_stream_equals_batch(spark, sf_dir, tmp_path):
     )
     led = str(tmp_path / "dupgram_ledger")
     q = (
-        stream_dupgram_ledger(stream, led)
+        stream.writeStream.foreachBatch(
+            lambda b, i: ingest_dupgram_delta(b, led, i)
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()

@@ -341,219 +341,3 @@ def test_manifest_round_trip_and_tamper_detection(spark, sf_dir, tmp_path):
     )
     bad = {r["source"] for r in verify_manifest(extra, man, ["source"]).collect()}
     assert bad == {"srcNEW"}
-
-
-def test_repair_partitions_touches_only_corrupt_partitions(spark, sf_dir, tmp_path):
-    """Anti-entropy law: corrupt one split partition of the training
-    export; repair_partitions rewrites exactly that partition from
-    the source (healthy partitions' files keep their inodes), the
-    manifest verifies clean afterwards, and a second repair is a
-    no-op."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from chess_pipeline_spark.plans import catalog
-    from chess_pipeline_spark.sinks import (
-        repair_partitions,
-        verify_manifest,
-        write_manifest,
-        write_training_splits,
-    )
-    from chess_pipeline_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    assigned = docs.join(
-        catalog()["leakage_safe_split"].spark(spark, sf_dir).select("doc_id", "split"),
-        "doc_id",
-    )
-    out = str(tmp_path / "export")
-    man = str(tmp_path / "manifest")
-    write_training_splits(assigned, out)
-    write_manifest(assigned, man, ["split"])
-
-    def files(split):
-        d = os.path.join(out, f"split={split}")
-        return {
-            f: os.stat(os.path.join(d, f)).st_ino
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        }
-
-    healthy_before = files("train")
-
-    # corrupt the valid partition: rewrite it missing one row
-    # (materialize first — a lazy self-overwrite reads deleted files)
-    valid_pd = (
-        spark.read.parquet(os.path.join(out, "split=valid"))
-        .orderBy("doc_id")
-        .toPandas()
-    )
-    degraded = spark.createDataFrame(valid_pd.iloc[1:])
-    degraded.write.mode("overwrite").parquet(os.path.join(out, "split=valid"))
-    # the partition-dir rewrite leaves stray _SUCCESS etc. but the
-    # reader sees the degraded rows
-    assert verify_manifest(
-        spark.read.parquet(out), man, ["split"]
-    ).count() == 1
-
-    repaired = repair_partitions(assigned, out, man, ["split"])
-    assert repaired == [("valid",)]
-    assert verify_manifest(spark.read.parquet(out), man, ["split"]).count() == 0
-    assert files("train") == healthy_before  # untouched inodes
-    assert repair_partitions(assigned, out, man, ["split"]) == []
-
-
-def test_repair_partitions_removes_orphan_partitions(spark, sf_dir, tmp_path):
-    """The r8 ADVICE convergence gap: a corrupt/extra target partition
-    whose key has NO source rows was reported bad but never rewritten
-    (dynamic partition overwrite can't touch a partition absent from
-    the written frame), so repair never converged for it. The repair
-    now deletes such orphan partition directories outright: one repair
-    pass, then the manifest verifies clean and a second pass is a
-    no-op."""
-    import os
-
-    from chess_pipeline_spark.plans import catalog
-    from chess_pipeline_spark.sinks import (
-        repair_partitions,
-        verify_manifest,
-        write_manifest,
-        write_training_splits,
-    )
-    from chess_pipeline_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    assigned = docs.join(
-        catalog()["leakage_safe_split"].spark(spark, sf_dir).select("doc_id", "split"),
-        "doc_id",
-    )
-    out = str(tmp_path / "export")
-    man = str(tmp_path / "manifest")
-    write_training_splits(assigned, out)
-    write_manifest(assigned, man, ["split"])
-
-    # plant an orphan partition: a split value that exists in neither
-    # the source nor the manifest
-    orphan_rows = assigned.limit(3).drop("split")
-    orphan_rows.write.mode("overwrite").parquet(
-        os.path.join(out, "split=stale_experiment")
-    )
-    assert verify_manifest(spark.read.parquet(out), man, ["split"]).count() == 1
-
-    repaired = repair_partitions(assigned, out, man, ["split"])
-    assert repaired == [("stale_experiment",)]
-    assert not os.path.exists(os.path.join(out, "split=stale_experiment"))
-    assert verify_manifest(spark.read.parquet(out), man, ["split"]).count() == 0
-    assert repair_partitions(assigned, out, man, ["split"]) == []
-
-
-def test_repair_removes_orphan_with_escaped_partition_value(spark, tmp_path):
-    """Hive-layout partition values with special characters are
-    percent-escaped on disk (e.g. 'a b:c' -> 'a%20b%3Ac'); the orphan
-    deletion must match the ESCAPED directory by unescaping it, not
-    re-derive the path from the raw value."""
-    import os
-
-    from chess_pipeline_spark.sinks import (
-        repair_partitions,
-        verify_manifest,
-        write_manifest,
-    )
-
-    src = spark.createDataFrame(
-        [("clean", 1), ("clean", 2), ("a b:c", 3)], "part string, v int"
-    )
-    out = str(tmp_path / "data")
-    man = str(tmp_path / "man")
-    src.write.partitionBy("part").mode("overwrite").parquet(out)
-    # the escaped dir exists on disk
-    dirs = [d for d in os.listdir(out) if d.startswith("part=")]
-    assert any("%" in d for d in dirs), dirs
-    # manifest + source agree only on the 'clean' partition: the
-    # escaped one becomes an orphan with no source rows
-    keep = src.filter("part = 'clean'")
-    write_manifest(keep, man, ["part"])
-    repaired = repair_partitions(keep, out, man, ["part"])
-    assert repaired == [("a b:c",)]
-    assert not any("%" in d for d in os.listdir(out) if d.startswith("part="))
-    assert verify_manifest(spark.read.parquet(out), man, ["part"]).count() == 0
-    assert repair_partitions(keep, out, man, ["part"]) == []
-
-
-def test_repair_refuses_stale_source_for_manifest_listed_keys(spark, tmp_path):
-    """The r9 ADVICE deletion hazard: orphan = MANIFEST-absent, never
-    source-absent. A manifest-listed key whose rows are missing from
-    the source means the caller passed a stale/filtered source;
-    deleting that partition would be irreversible data loss, so the
-    repair must raise and leave the target byte-untouched."""
-    import os
-
-    import pytest
-
-    from chess_pipeline_spark.sinks import (
-        repair_partitions,
-        write_manifest,
-    )
-
-    src = spark.createDataFrame(
-        [("a", 1), ("a", 2), ("b", 3)], "part string, v int"
-    )
-    out = str(tmp_path / "data")
-    man = str(tmp_path / "man")
-    src.write.partitionBy("part").mode("overwrite").parquet(out)
-    write_manifest(src, man, ["part"])
-    # corrupt partition b so verify flags it, then hand repair a
-    # source filtered down to partition a only
-    spark.createDataFrame([(99,)], "v int").write.mode("overwrite").parquet(
-        os.path.join(out, "part=b")
-    )
-    stale = src.filter("part = 'a'")
-    with pytest.raises(ValueError, match="manifest lists keys"):
-        repair_partitions(stale, out, man, ["part"])
-    # the manifest-covered partition directory survived the refusal
-    assert os.path.isdir(os.path.join(out, "part=b"))
-
-
-def test_repair_casts_inferred_partition_types_to_source_schema(spark, tmp_path):
-    """Partition-directory values like part=7 are int-inferred when the
-    target is read back, while the source key column is string; the
-    verify-join tuples must be cast to the SOURCE key schema before
-    comparison or a repairable digit-keyed partition is misclassified
-    as an orphan and deleted instead of rewritten."""
-    import os
-
-    from chess_pipeline_spark.sinks import (
-        repair_partitions,
-        verify_manifest,
-        write_manifest,
-    )
-
-    src = spark.createDataFrame(
-        [("7", 1), ("7", 2), ("8", 3)], "part string, v int"
-    )
-    out = str(tmp_path / "data")
-    man = str(tmp_path / "man")
-    src.write.partitionBy("part").mode("overwrite").parquet(out)
-    write_manifest(src, man, ["part"])
-    # reader infers the digit partition values as ints (the hash side
-    # of the manifest therefore flags every partition — type inference
-    # changed the hashed bytes — but the point under test is the
-    # orphan/repairable CLASSIFICATION, which must compare key tuples
-    # in the source schema)
-    assert dict(spark.read.parquet(out).dtypes)["part"] in ("int", "bigint")
-    # corrupt partition 7: drop a row
-    spark.createDataFrame([(1,)], "v int").write.mode("overwrite").parquet(
-        os.path.join(out, "part=7")
-    )
-    repaired = repair_partitions(src, out, man, ["part"])
-    assert ("7",) in repaired
-    assert all(k in {("7",), ("8",)} for k in repaired)
-    # repaired in place from the source — never deleted-as-orphan
-    assert os.path.isdir(os.path.join(out, "part=7"))
-    assert os.path.isdir(os.path.join(out, "part=8"))
-    got = {
-        (str(r["part"]), r["v"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == {("7", 1), ("7", 2), ("8", 3)}

@@ -23,7 +23,6 @@ from chess_pipeline_spark.streaming.jobs import (
     ADDITIVE_LEDGERS,
     ingest_spangram_delta,
     spans_from_ledger,
-    stream_spangram_ledger,
 )
 
 
@@ -32,7 +31,7 @@ def _rows(df):
 
 
 def test_spangram_ledger_stream_equals_batch(spark, sf_dir, tmp_path):
-    """Two arrival files streamed through stream_spangram_ledger →
+    """Two arrival files streamed through ingest_spangram_delta →
     spans_from_ledger over the full corpus equals exact_substring_spans
     exactly, INCLUDING cross-batch repeats (a gram occurring once in
     each batch must flag as repeated — occurrence counts add across
@@ -57,7 +56,9 @@ def test_spangram_ledger_stream_equals_batch(spark, sf_dir, tmp_path):
     )
     led = str(tmp_path / "spangram_ledger")
     q = (
-        stream_spangram_ledger(stream, led)
+        stream.writeStream.foreachBatch(
+            lambda b, i: ingest_spangram_delta(b, led, i)
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()

@@ -17,8 +17,6 @@ from chess_pipeline_spark.streaming.jobs import (
     read_events_stream,
     stream_dedup_latest,
     stream_session_counts,
-    stream_sliding_counts,
-    stream_static_enrich,
     stream_tumbling_counts,
     stream_upsert_foreach_batch,
 )
@@ -52,15 +50,6 @@ def test_stream_tumbling_matches_batch(spark, sf_dir, tmp_path):
     assert g == b and len(g) > 0
 
 
-def test_stream_sliding_matches_batch(spark, sf_dir, tmp_path):
-    ev = read_events_stream(spark, sf_dir)
-    got = _run_to_memory(stream_sliding_counts(ev), spark, tmp_path)
-    batch = timeseries.events_sliding_1h_30m(spark, sf_dir)
-    g = _rows(got.select("window_start", "event_type", "n"))
-    b = _rows(batch.select("window_start", "event_type", "n"))
-    assert g == b and len(g) > 0
-
-
 def test_stream_sessionized_runs_and_covers_all_users(spark, sf_dir, tmp_path):
     ev = read_events_stream(spark, sf_dir)
     got = _run_to_memory(stream_session_counts(ev), spark, tmp_path)
@@ -79,26 +68,6 @@ def test_stream_dedup_latest(spark, sf_dir, tmp_path):
     assert got.count() == got.select("user_id", "event_type", "event_id").distinct().count()
 
 
-def test_stream_static_enrich(spark, sf_dir, tmp_path):
-    import pyspark.sql.functions as F
-
-    from chess_pipeline_spark.sources import load_table
-
-    # static dimension derived from the batch table: per-user cohort
-    dim = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id")
-        .distinct()
-        .withColumn("cohort", (F.col("user_id") % 10).cast("int"))
-    )
-    ev = read_events_stream(spark, sf_dir)
-    enriched = stream_static_enrich(ev, dim)
-    got = _run_to_memory(enriched, spark, tmp_path, complete=False)
-    total = load_table(spark, sf_dir, "events").count()
-    assert got.count() == total  # left join preserves the stream
-    assert got.filter(F.col("cohort") != F.col("user_id") % 10).count() == 0
-
-
 def test_stream_upsert_foreach_batch(spark, sf_dir, tmp_path):
     ev = read_events_stream(spark, sf_dir)
     agg = stream_tumbling_counts(ev)
@@ -113,40 +82,6 @@ def test_stream_upsert_foreach_batch(spark, sf_dir, tmp_path):
     assert _rows(got.select("window_start", "event_type", "n")) == _rows(
         batch.select("window_start", "event_type", "n")
     )
-
-
-def test_stream_interval_join_matches_batch_pairs(spark, sf_dir, tmp_path):
-    # the stream-stream range join must produce exactly the
-    # (purchase, error) pairs a direct batch inequality join finds
-    import pyspark.sql.functions as F
-
-    from chess_pipeline_spark.sources import load_table
-    from chess_pipeline_spark.streaming.jobs import stream_interval_join
-
-    ev = read_events_stream(spark, sf_dir)
-    got = _run_to_memory(stream_interval_join(ev), spark, tmp_path, complete=False)
-
-    b = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts_sec"
-    )
-    p = b.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_event_id"),
-        "user_id",
-        F.col("ts_sec").alias("p_ts_sec"),
-    )
-    e = b.filter(F.col("event_type") == "error").select(
-        F.col("user_id").alias("e_user"), F.col("ts_sec").alias("err_ts_sec")
-    )
-    # direct inequality join is fine at test scale (nested loop)
-    expected = p.join(
-        e,
-        (p.user_id == e.e_user)
-        & (F.col("err_ts_sec") >= F.col("p_ts_sec") - 600)
-        & (F.col("err_ts_sec") < F.col("p_ts_sec")),
-    ).select("p_event_id", "user_id", "p_ts_sec", "err_ts_sec")
-    g = _rows(got.select("p_event_id", "user_id", "p_ts_sec", "err_ts_sec"))
-    x = _rows(expected)
-    assert g == x and len(g) > 0
 
 
 def test_stream_curation_matches_batch(spark, sf_dir, tmp_path):

@@ -79,14 +79,12 @@ def test_incremental_ingest_equals_full_rebuild(spark, sf_dir, tmp_path):
 
 
 def test_streamed_index_equals_batch_build(spark, sf_dir, tmp_path):
-    """Drive documents through stream_text_index_ingest in two
-    micro-batches via a real file-source stream: the streamed index
-    must answer the fixed BM25 query bit-identically to a one-shot
-    batch build over the same documents."""
+    """Drive documents through ingest_text_delta from a foreachBatch
+    sink, in two micro-batches of a real file-source stream: the
+    streamed index must answer the fixed BM25 query bit-identically
+    to a one-shot batch build over the same documents."""
     import os
     import time
-
-    from chess_pipeline_spark.streaming.jobs import stream_text_index_ingest
 
     docs = load_table(spark, sf_dir, "documents")
     src = tmp_path / "doc_arrivals"
@@ -109,7 +107,7 @@ def test_streamed_index_equals_batch_build(spark, sf_dir, tmp_path):
     )
     idx = str(tmp_path / "tix_stream")
     q = (
-        stream_text_index_ingest(stream, idx)
+        stream.writeStream.foreachBatch(lambda b, i: ingest_text_delta(b, idx, i))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
